@@ -13,7 +13,9 @@ closes the class, permanently:
   callable in the codec modules named ``decode_*`` / ``read_*`` or
   ending in ``_meta`` / ``_census`` / ``_chain`` that takes one
   required ``bytes`` argument. A future walker is fuzzed the moment it
-  is exported; forgetting to list it here is impossible.
+  is exported; forgetting to list it here is impossible. Surfaces that
+  need more than the bytes (``build_batch_decoder(struct)``) are bound
+  to a fixture schema in ``explicit_targets``.
 * Fixtures cover every container shape the encoders can produce:
   single-page TIFF in all four compressions (+ palette, bilevel,
   predictor-2, multi-strip), MULTI-PAGE TIFF (the r10 hole lived
@@ -52,6 +54,7 @@ import sys
 import traceback
 
 import numpy as np
+from pyspark.sql import types as T
 
 REPO = __file__.rsplit("/scripts/", 1)[0]
 sys.path.insert(0, REPO)
@@ -124,6 +127,29 @@ def discover_targets() -> dict:
             if len(required) == 1:
                 targets[f"{short}.{name}"] = fn
     return targets
+
+
+# The struct the batch Example decoder is bound to: one column per
+# fast-path type, so the scalar-layout fixtures below exercise its numpy
+# walk and every other TFRecord fixture its reference fallback.
+BATCH_STRUCT = T.StructType([
+    T.StructField("b", T.BinaryType()),
+    T.StructField("f", T.DoubleType()),
+    T.StructField("i", T.LongType()),
+    T.StructField("s", T.StringType()),
+])
+
+
+def explicit_targets() -> dict:
+    """Surfaces the export scan cannot see: ``build_batch_decoder``
+    takes a schema, so it is bound to BATCH_STRUCT and fed whole
+    shards the way the load path feeds it."""
+    decode = example_proto.build_batch_decoder(BATCH_STRUCT)
+    return {
+        "example_proto.build_batch_decoder": (
+            lambda blob: decode(*tfrecord_io.read_shard(blob))
+        ),
+    }
 
 
 def _rgb(seed: int, w: int, h: int) -> bytes:
@@ -199,6 +225,15 @@ def build_fixtures() -> dict[str, bytes]:
     )
     fx["tfrecord_raw"] = tfrecord_io.records_to_bytes([ex, ex])
     fx["tfrecord_gzip"] = tfrecord_io.records_to_bytes([ex, ex], compress=True)
+    # scalar-layout shards: the canonical records the batch decoder's
+    # fast path parses (build_batch_encoder output over BATCH_STRUCT)
+    scalar = example_proto.build_batch_encoder(
+        {"b": "bytes", "f": "float", "i": "int64", "s": "bytes"}
+    )([[b"\x00\xff", None], [0.5, None], [300, -(2**63)], ["hello", None]])
+    fx["tfrecord_scalar_raw"] = tfrecord_io.records_to_bytes(scalar)
+    fx["tfrecord_scalar_gzip"] = tfrecord_io.records_to_bytes(
+        scalar, compress=True
+    )
 
     fx["webp_vp8l"] = vp8l_codec.encode_vp8l(_rgb(9, 6, 5), 6, 5, "RGB")
     fx["webp_vp8"] = vp8_codec.encode_webp_vp8(_rgb(10, 8, 8), 8, 8, "RGB")
@@ -281,7 +316,7 @@ def main() -> int:
 
     signal.signal(signal.SIGALRM, _alarm)
 
-    targets = discover_targets()
+    targets = {**discover_targets(), **explicit_targets()}
     fixtures = build_fixtures()
     print(f"targets ({len(targets)}): {', '.join(sorted(targets))}")
     print(f"fixtures ({len(fixtures)}): {', '.join(sorted(fixtures))}")

@@ -19,11 +19,19 @@ format of the Example message directly:
 Encoding detail that matters for byte-level golden tests: protobuf map
 serialization order is not canonical; this encoder emits map entries in
 sorted-key order so output is deterministic.
+
+The convert path encodes with :func:`build_batch_encoder` and the load
+path decodes whole shards with :func:`build_batch_decoder`. The
+per-record :func:`encode_example` and :func:`decode_example` are their
+references, and ``decode_example`` + ``_scalar`` is also the batch
+decoder's fallback for records outside the encoder's layout.
 """
 
 from __future__ import annotations
 
 import struct
+
+from pyspark.sql import types as T
 
 # ---------------------------------------------------------------- varint
 
@@ -281,6 +289,8 @@ def _pa_scalar_array(values, pa_type, np_dtype):
     n = len(a)
     if n == 0:
         return np.zeros(0, dtype=np_dtype), np.zeros(0, dtype=bool)
+    if a.buffers()[1] is None:  # Arrow may omit an all-null data buffer
+        return None
     vals = np.frombuffer(a.buffers()[1], dtype=np_dtype, count=n + a.offset)[
         a.offset :
     ]
@@ -304,12 +314,16 @@ def _float_scalar_entries(values, prefix, null_entry):
         return []
     vals = np.where(nulls, 0.0, vals)
     nulls = nulls | np.isnan(vals)
+    with np.errstate(over="ignore"):
+        f4 = vals.astype("<f4")
+    # a finite double that rounds to inf in float32: the loop's
+    # struct.pack raises OverflowError, so decline rather than write inf
+    if (np.isinf(f4) & np.isfinite(vals)).any():
+        return None
     p = len(prefix)
     mat = np.empty((n, p + 4), dtype=np.uint8)
     mat[:, :p] = np.frombuffer(prefix, dtype=np.uint8)
-    mat[:, p:] = (
-        vals.astype("<f4").view(np.uint8).reshape(n, 4)
-    )
+    mat[:, p:] = f4.view(np.uint8).reshape(n, 4)
     entries = _slice_rows(mat)
     if nulls.any():
         for i in np.flatnonzero(nulls).tolist():
@@ -642,3 +656,248 @@ def _decode_example_inner(data: bytes) -> dict[str, tuple[str, list]]:
             if name is not None:
                 out[name] = (kind, values)
     return out
+
+
+def _scalar(kind_values, target: T.DataType):
+    """One decoded feature -> the value of a ``target``-typed column (the
+    reference per-cell conversion of the load path)."""
+    kind, values = kind_values
+    if not values:
+        return None
+    v = values[0]
+    if isinstance(target, T.StringType):
+        return v.decode("utf-8") if isinstance(v, (bytes, bytearray)) else str(v)
+    if isinstance(target, T.BinaryType):
+        return bytes(v)
+    if isinstance(target, (T.LongType, T.IntegerType)):
+        return int(v)
+    if isinstance(target, (T.DoubleType, T.FloatType)):
+        return float(v)
+    if isinstance(target, T.ArrayType):
+        elem = target.elementType
+        return [_scalar((kind, [x]), elem) for x in values]
+    return v
+
+
+# ------------------------------------------------ columnar batch decoding
+#
+# The mirror of build_batch_encoder for the load path. A record written
+# by that encoder has, for every column in sorted-name order, the entry
+#
+#   0x0a len { 0x0a len key  0x12 len { kind_tag len { 0x0a len value } } }
+#
+# (a null is an empty list: no inner value for bytes, an empty packed
+# payload for float/int64). The batch decoder walks that layout for ALL
+# records of a shard at once: one numpy cursor per record, every tag,
+# key byte and nested length checked, varints read vectorized. A record
+# that leaves the layout anywhere (another key order, unpacked or
+# multi-value lists, missing or extra features, invalid UTF-8) is
+# decoded by decode_example + _scalar — the reference — and spliced back
+# at its row, so the output equals the reference on every record.
+
+# Spark type of a fast-path column -> its Feature kind tag
+_FAST_KIND_TAGS = {"string": 0x0A, "binary": 0x0A, "bigint": 0x1A, "double": 0x12}
+
+
+def _read_varints(buf, pos):
+    """The varint at each position of ``buf`` -> (values uint64, byte
+    counts int64); the count is 0 where the varint does not fit 64 bits
+    (the caller's checks then reject the record). Reads up to 10 bytes
+    past each position."""
+    import numpy as np
+
+    b = buf[pos]
+    vals = (b & 0x7F).astype(np.uint64)
+    nbytes = np.ones(len(pos), dtype=np.int64)
+    more = np.flatnonzero(b & 0x80)
+    for k in range(1, 10):
+        if not len(more):
+            break
+        bk = buf[pos[more] + k]
+        vals[more] |= (bk & 0x7F).astype(np.uint64) << np.uint64(7 * k)
+        nbytes[more] += 1
+        if k == 9:  # the 10th byte may carry only bit 63
+            nbytes[more[bk > 1]] = 0
+        more = more[(bk & 0x80) != 0]
+    return vals, nbytes
+
+
+def _bytes_column(data: bytes, starts, lengths, valid, utf8: bool):
+    """Arrow string/binary array from per-row slices of ``data``: one
+    join of the valid rows' bodies plus offsets (int64 past 2 GiB)."""
+    import numpy as np
+    import pyarrow as pa
+
+    lengths = np.where(valid, lengths, 0)
+    offsets = np.zeros(len(lengths) + 1, dtype=np.int64)
+    np.cumsum(lengths, out=offsets[1:])
+    body = b"".join(
+        [
+            data[s : s + n]
+            for s, n in zip(starts[valid].tolist(), lengths[valid].tolist())
+        ]
+    )
+    large = offsets[-1] > 2**31 - 1
+    if utf8:
+        typ = pa.large_string() if large else pa.string()
+    else:
+        typ = pa.large_binary() if large else pa.binary()
+    if not large:
+        offsets = offsets.astype(np.int32)
+    nulls = len(valid) - int(np.count_nonzero(valid))
+    bitmap = pa.py_buffer(np.packbits(valid, bitorder="little")) if nulls else None
+    return pa.Array.from_buffers(
+        typ, len(valid), [bitmap, pa.py_buffer(offsets), pa.py_buffer(body)],
+        null_count=nulls,
+    )
+
+
+def build_batch_decoder(struct):
+    """Compile a column-wise batch Example decoder for a Spark StructType
+    (the load hot path; the mirror of :func:`build_batch_encoder`).
+
+    The returned callable takes one decompressed shard ``data`` and its
+    record ``starts``/``lengths`` (tfrecord_io.record_offsets) and returns
+    one ``pyarrow.RecordBatch`` with a column per struct field, rows in
+    record order. Values equal ``decode_example`` + ``_scalar`` on every
+    record: string/binary, bigint and double columns in the encoder's
+    canonical single-value layout decode in numpy; every other record,
+    and every record when a field has another type, goes through the
+    reference. Corrupt input raises only ValueError.
+    """
+    import numpy as np
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    fields = [(f.name, f.dataType) for f in struct.fields]
+    names = [name for name, _ in fields]
+    arrow_types = [to_arrow_type(dtype) for _, dtype in fields]
+    tags = [_FAST_KIND_TAGS.get(dtype.simpleString()) for _, dtype in fields]
+    fast = None not in tags
+    # per column in canonical (sorted) order: struct index, key field
+    # bytes, kind tag
+    order = []
+    for name in sorted(names):
+        j = names.index(name)
+        key = name.encode("utf-8")
+        key_field = np.frombuffer(b"\x0a" + _varint(len(key)) + key, np.uint8)
+        order.append((j, key_field, tags[j]))
+    # every read lies within a fixed distance of a position <= len(data):
+    # a column's chain of tags, keys and 10-byte varints
+    pad = 96 + max((len(key) for _, key, _ in order), default=0)
+
+    def length(buf, pos, limit):
+        """Length varint at each pos -> (value, position after it, ok):
+        ok where the varint fits and the value stays within limit."""
+        v, nb = _read_varints(buf, pos)
+        after = pos + nb
+        room = np.maximum(limit - after, 0).astype(np.uint64)
+        good = (nb > 0) & (after <= limit) & (v <= room)
+        return np.where(good, v, np.uint64(0)).astype(np.int64), after, good
+
+    def walk(buf, starts, end):
+        """-> (ok, per struct field (values, null)): ok marks the records
+        in the canonical layout; values are float64/int64 arrays, or
+        (body starts, body lengths) for string/binary columns."""
+        cols = [None] * len(fields)
+        # Example { 0x0a len Features } spanning the whole record
+        ok = (buf[starts] == 0x0A) & (end > starts)
+        flen, pos, good = length(buf, starts + 1, end)
+        ok &= good & (pos + flen == end)
+        pos = np.where(ok, pos, 0)
+        for j, key, tag in order:
+            good = (buf[pos] == 0x0A) & (pos < end)
+            elen, p, g = length(buf, pos + 1, end)
+            eend = p + elen
+            good &= g & (p + len(key) <= eend)
+            good &= (buf[p[:, None] + np.arange(len(key))] == key).all(axis=1)
+            p = p + len(key)
+            good &= (buf[p] == 0x12) & (p < eend)
+            flen, p, g = length(buf, p + 1, eend)
+            good &= g & (p + flen == eend) & (buf[p] == tag) & (p < eend)
+            ilen, p, g = length(buf, p + 1, eend)
+            good &= g & (p + ilen == eend)
+            # the list: empty (null) or exactly one packed/bytes value
+            null = ilen == 0
+            vlen, q, g = length(buf, p + 1, eend)
+            good &= null | ((buf[p] == 0x0A) & g & (q + vlen == eend))
+            if tag == 0x12:  # FloatList
+                null |= vlen == 0
+                good &= null | (vlen == 4)
+                col = buf[q[:, None] + np.arange(4)].view("<f4")[:, 0]
+                col = col.astype(np.float64)
+            elif tag == 0x1A:  # Int64List
+                null |= vlen == 0
+                v, nb = _read_varints(buf, q)
+                good &= null | (nb == vlen)
+                col = v.view(np.int64)
+            else:
+                col = (q, vlen)
+            cols[j] = (col, null)
+            ok &= good
+            pos = np.where(ok, eend, 0)
+        return ok & (pos == end), cols
+
+    def build(data, ok, cols):
+        arrays = []
+        for j, (col, null) in enumerate(cols):
+            valid = ok & ~null
+            if isinstance(col, tuple):
+                utf8 = arrow_types[j] == pa.string()
+                arrays.append(_bytes_column(data, *col, valid, utf8))
+            else:
+                arrays.append(pa.array(col, mask=~valid, type=arrow_types[j]))
+        return arrays
+
+    def reference_arrays(data, starts, lengths):
+        """decode_example + _scalar per record -> one array per field."""
+        rows = []
+        for s, n in zip(starts.tolist(), lengths.tolist()):
+            feats = decode_example(data[s : s + n])
+            try:
+                rows.append(
+                    [_scalar(feats[name], dt) if name in feats else None
+                     for name, dt in fields]
+                )
+            except (TypeError, OverflowError) as exc:
+                raise ValueError(f"corrupt Example value: {exc!r}") from exc
+        try:
+            return [
+                pa.array([r[j] for r in rows], type=t)
+                for j, t in enumerate(arrow_types)
+            ]
+        except (pa.ArrowException, OverflowError, TypeError) as exc:
+            raise ValueError(f"corrupt Example value: {exc!r}") from exc
+
+    def decode_batch(data: bytes, starts, lengths) -> pa.RecordBatch:
+        m = len(starts)
+        ok = np.zeros(m, dtype=bool)
+        arrays = None
+        if fast and m:
+            buf = np.zeros(len(data) + pad, dtype=np.uint8)
+            buf[: len(data)] = np.frombuffer(data, dtype=np.uint8)
+            ok, cols = walk(buf, starts, starts + lengths)
+            if ok.any():
+                arrays = build(data, ok, cols)
+                try:
+                    for a in arrays:
+                        a.validate(full=True)
+                except pa.ArrowInvalid:
+                    # invalid UTF-8 in a string column: the reference
+                    # raises on that record, so let it decode them all
+                    ok[:] = False
+        slow = np.flatnonzero(~ok)
+        if len(slow) == m:
+            arrays = reference_arrays(data, starts, lengths)
+        elif len(slow):
+            ref = reference_arrays(data, starts[slow], lengths[slow])
+            splice = np.arange(m)
+            splice[slow] = m + np.arange(len(slow))
+            splice = pa.array(splice)
+            arrays = [
+                pa.concat_arrays([a, r.cast(a.type)]).take(splice)
+                for a, r in zip(arrays, ref)
+            ]
+        return pa.RecordBatch.from_arrays(arrays, names=names)
+
+    return decode_batch

@@ -119,9 +119,10 @@ def frame_records(records: list[bytes]) -> bytes:
     return b"".join(parts)
 
 
-def read_records(data: bytes, verify: bool = False) -> Iterator[bytes]:
-    """Iterate the records in a raw (already-decompressed) TFRecord byte
-    string. ``verify=True`` checks both CRCs (golden tests).
+def record_offsets(data, verify: bool = False) -> tuple[np.ndarray, np.ndarray]:
+    """Unframe a raw (already-decompressed) TFRecord byte string in one
+    pass: -> (starts, lengths), int64 arrays locating each record's
+    payload in ``data``. ``verify=True`` checks both CRCs (golden tests).
 
     Corrupt input raises ONLY the declared ValueError (r11): a record
     whose length field runs past the end of file used to reach
@@ -129,13 +130,15 @@ def read_records(data: bytes, verify: bool = False) -> Iterator[bytes]:
     the same totality class as the codec walkers. A truncated stream is
     a loud declared failure, matching tf.data's DataLossError
     semantics, not a silent partial read."""
+    starts: list[int] = []
+    lengths: list[int] = []
+    u64 = _U64.unpack_from
+    u32 = _U32.unpack_from
     pos = 0
     n = len(data)
     while pos + 12 <= n:
-        header = data[pos : pos + 8]
-        (length,) = _U64.unpack(header)
-        (header_crc,) = _U32.unpack(data[pos + 8 : pos + 12])
-        if verify and masked_crc32c(header) != header_crc:
+        (length,) = u64(data, pos)
+        if verify and masked_crc32c(data[pos : pos + 8]) != u32(data, pos + 8)[0]:
             raise ValueError(f"corrupt TFRecord header at offset {pos}")
         start = pos + 12
         if start + length + 4 > n:
@@ -143,17 +146,28 @@ def read_records(data: bytes, verify: bool = False) -> Iterator[bytes]:
                 f"corrupt TFRecord: record at offset {pos} declares "
                 f"{length} payload bytes but the stream ends at {n}"
             )
-        payload = data[start : start + length]
-        (data_crc,) = _U32.unpack(data[start + length : start + length + 4])
-        if verify and masked_crc32c(payload) != data_crc:
+        if verify and (
+            masked_crc32c(data[start : start + length])
+            != u32(data, start + length)[0]
+        ):
             raise ValueError(f"corrupt TFRecord payload at offset {start}")
-        yield payload
+        starts.append(start)
+        lengths.append(length)
         pos = start + length + 4
     if pos != n:
         raise ValueError(
             f"corrupt TFRecord: {n - pos} trailing bytes after the last "
             "complete record"
         )
+    return np.array(starts, dtype=np.int64), np.array(lengths, dtype=np.int64)
+
+
+def read_records(data: bytes, verify: bool = False) -> Iterator[bytes]:
+    """Iterate the records in a raw (already-decompressed) TFRecord byte
+    string; framing checks and errors are :func:`record_offsets`'."""
+    starts, lengths = record_offsets(data, verify)
+    for start, length in zip(starts.tolist(), lengths.tolist()):
+        yield data[start : start + length]
 
 
 def open_output(path: str, compressed: bool | str | None):
@@ -222,8 +236,11 @@ def _maybe_decompress_blob(blob: bytes, compressed) -> bytes:
     return blob
 
 
-def read_file_records(path_or_bytes, compressed=None) -> Iterator[bytes]:
-    """Read all records from a file path or an in-memory bytes blob.
+def read_shard(path_or_bytes, compressed=None) -> tuple[bytes, np.ndarray, np.ndarray]:
+    """Decompress and unframe one whole shard from a file path or an
+    in-memory blob -> (data, starts, lengths), where record ``i`` is
+    ``data[starts[i] : starts[i] + lengths[i]]`` (see
+    :func:`record_offsets`).
 
     ``compressed=None`` infers from the path extension (paths) or the
     magic bytes (blobs) — the reference infers from extension
@@ -235,14 +252,21 @@ def read_file_records(path_or_bytes, compressed=None) -> Iterator[bytes]:
     tf.data raises its declared DataLossError."""
     try:
         if isinstance(path_or_bytes, (bytes, bytearray)):
-            yield from read_records(
-                _maybe_decompress_blob(bytes(path_or_bytes), compressed)
-            )
+            data = _maybe_decompress_blob(bytes(path_or_bytes), compressed)
         else:
             with open_maybe_gzip(path_or_bytes, "rb") as fh:
-                yield from read_records(fh.read())
+                data = fh.read()
     except (gzip.BadGzipFile, zlib.error, EOFError) as exc:
         raise ValueError(f"corrupt TFRecord stream: {exc!r}") from exc
+    return (data, *record_offsets(data))
+
+
+def read_file_records(path_or_bytes, compressed=None) -> Iterator[bytes]:
+    """Read all records from a file path or an in-memory bytes blob
+    (decompression, inference and errors as :func:`read_shard`)."""
+    data, starts, lengths = read_shard(path_or_bytes, compressed)
+    for start, length in zip(starts.tolist(), lengths.tolist()):
+        yield data[start : start + length]
 
 
 def records_to_bytes(records: list[bytes], compress: bool = False) -> bytes:

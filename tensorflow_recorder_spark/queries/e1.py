@@ -934,6 +934,8 @@ FROM inter JOIN sizes s ON s.doc_id = inter.id_a
 WHERE round(n_shared::DOUBLE / s.sz, 6) >= 0.5
 """
 
+BANDS = (2, 4, 8)  # band settings of the sweep: rows-per-band 4/2/1
+
 def q_e1_band_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E1 LSH band-tuning curve (the dedup analog of
     ``e2_nprobe_recall_curve``): candidate recall/precision of MinHash
@@ -985,7 +987,7 @@ def q_e1_band_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(sb), "id_b")
         .where(F.col("__sa") == F.col("__sb"))
         .select(F.lit(bands).cast("int").alias("bands"), "id_a", "id_b")
-        for bands in (2, 4, 8)
+        for bands in BANDS
     ]
     cand_all = reduce(lambda a, b: a.unionByName(b), cands).localCheckpoint(
         eager=True
@@ -998,9 +1000,7 @@ def q_e1_band_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("bands")
         .agg(F.count(F.lit(1)).cast("long").alias("n_hit"))
     )
-    arms = spark.createDataFrame(
-        [(2,), (4,), (8,)], "bands int"
-    )
+    arms = spark.createDataFrame([(b,) for b in BANDS], "bands int")
     return (
         arms.crossJoin(t)
         .join(c_cnt, "bands", "left")

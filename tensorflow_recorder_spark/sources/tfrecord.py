@@ -9,8 +9,13 @@ parses records with the persisted feature spec.
 Spark-first design: files are scanned with the distributed ``binaryFile``
 source (one task per file; TFRecord files are the write-side shards, so
 file-level parallelism equals write-side shard parallelism) and parsed in
-``mapInPandas`` with the pure-Python Example decoder. Schema comes from
-the persisted transformed StructType (replacing TFTransformOutput).
+``mapInArrow``, one Arrow RecordBatch per file. Each shard is
+decompressed and unframed in one offsets pass
+(tfrecord_io.read_shard), then decoded column-wise by the batch Example
+decoder compiled for the persisted transformed StructType
+(example_proto.build_batch_decoder, replacing TFTransformOutput): the
+encoder's canonical layout is parsed in numpy, and any record outside it
+falls back to the reference ``decode_example`` + ``_scalar`` at its row.
 """
 
 from __future__ import annotations
@@ -19,54 +24,29 @@ import glob as globlib
 import os
 from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, types as T
 
 from ..constants import OUTPUT_SPLITS
 from ..functions import fs
-from ..functions.example_proto import decode_example
-from ..functions.tfrecord_io import read_file_records
+from ..functions.example_proto import build_batch_decoder
+from ..functions.tfrecord_io import read_shard
 from ..sinks.artifacts import read_schema_metadata, validate_job_dir
-
-
-def _scalar(kind_values, target: T.DataType):
-    kind, values = kind_values
-    if not values:
-        return None
-    v = values[0]
-    if isinstance(target, T.StringType):
-        return v.decode("utf-8") if isinstance(v, (bytes, bytearray)) else str(v)
-    if isinstance(target, T.BinaryType):
-        return bytes(v)
-    if isinstance(target, (T.LongType, T.IntegerType)):
-        return int(v)
-    if isinstance(target, (T.DoubleType, T.FloatType)):
-        return float(v)
-    if isinstance(target, T.ArrayType):
-        elem = target.elementType
-        return [_scalar((kind, [x]), elem) for x in values]
-    return v
 
 
 def read_tfrecords(
     spark: SparkSession, paths: list[str], struct: T.StructType
 ) -> DataFrame:
     """Parse TFRecord files into rows of ``struct``."""
-    fields = [(f.name, f.dataType) for f in struct.fields]
+    decode = build_batch_decoder(struct)
 
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {name: [] for name, _ in fields}
-            for blob in pdf["content"]:
-                for record in read_file_records(bytes(blob)):
-                    feats = decode_example(record)
-                    for name, dtype in fields:
-                        value = _scalar(feats[name], dtype) if name in feats else None
-                        rows[name].append(value)
-            yield pd.DataFrame(rows)
+    def parse(batches: Iterator) -> Iterator:
+        for rb in batches:
+            content = rb.column(0)
+            for i in range(len(content)):
+                yield decode(*read_shard(content[i].as_py()))
 
     files = spark.read.format("binaryFile").load(paths).select("content")
-    return files.mapInPandas(parse, schema=struct)
+    return files.mapInArrow(parse, schema=struct)
 
 
 def split_files(job_dir: str, split: str) -> list[str]:

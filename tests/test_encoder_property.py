@@ -4,6 +4,8 @@ arbitrary inputs (hypothesis-driven)."""
 
 import math
 
+import pyarrow as pa
+import pytest
 from hypothesis import given, settings, strategies as st
 
 from tensorflow_recorder_spark.functions.example_proto import (
@@ -30,6 +32,8 @@ def value_for(kind):
         st.none(),
         st.floats(allow_nan=False, allow_infinity=False, width=32),
         st.just(float("nan")),
+        # beyond float32 range: every path raises OverflowError
+        st.sampled_from([1e300, -1e300]),
     )
 
 
@@ -48,12 +52,23 @@ def test_fast_encoder_matches_reference(schema, data):
             return [int(v)]
         return [float(v)]
 
-    reference = encode_example(
-        {c: (schema[c], canonical(schema[c], v)) for c, v in zip(encoder.columns, values)}
-    )
-    assert encoder(values) == reference
     batch = build_batch_encoder(schema)
-    assert batch([[v] for v in values]) == [reference]
+    paths = [
+        lambda: [encoder(values)],
+        lambda: batch([[v] for v in values]),
+        lambda: batch([pa.array([v]) for v in values]),
+    ]
+    try:
+        reference = encode_example(
+            {c: (schema[c], canonical(schema[c], v)) for c, v in zip(encoder.columns, values)}
+        )
+    except OverflowError:
+        for path in paths:
+            with pytest.raises(OverflowError):
+                path()
+        return
+    for path in paths:
+        assert path() == [reference]
 
 
 @given(

@@ -97,16 +97,32 @@ def test_tfrecord_load_path_totality():
     record -> struct.error from _U32.unpack(b''); bit-flipped gzip ->
     BadGzipFile; corrupt proto -> IndexError (truncated varint),
     TypeError/AttributeError (wire-type flips), struct.error (short
-    fixed32)."""
+    fixed32).
+
+    The batch decoder of the load path runs on every mutant too: it
+    must give the reference's rows, or raise ValueError where the
+    reference (decode_example + _scalar) rejects the shard. The
+    scalar-layout fixture is the one its numpy fast path parses; the
+    multi-value fixture takes its reference fallback."""
     import numpy as np
+    from pyspark.sql import types as T
 
     from tensorflow_recorder_spark.functions.example_proto import (
+        build_batch_decoder,
+        build_batch_encoder,
         decode_example,
         encode_example,
     )
     from tensorflow_recorder_spark.functions.tfrecord_io import (
         read_file_records,
+        read_shard,
         records_to_bytes,
+    )
+    from tests.test_batch_decoder import (
+        REJECTED,
+        STRUCT,
+        assert_same,
+        reference_rows,
     )
 
     ex = encode_example(
@@ -116,28 +132,49 @@ def test_tfrecord_load_path_totality():
             "c": ("float", [0.5, -1.25]),
         }
     )
+    multi = T.StructType([
+        T.StructField("a", T.StringType()),
+        T.StructField("b", T.LongType()),
+        T.StructField("c", T.DoubleType()),
+    ])
+    scalar = build_batch_encoder({"s": "bytes", "b": "bytes", "i": "int64", "f": "float"})(
+        [[b"\x00\xff", None], [0.5, -1.25], [300, -(2**63)], ["hello", None]]
+    )
     rng = np.random.RandomState(0)
-    for comp in (False, True):
-        blob = records_to_bytes([ex, ex], compress=comp)
-        # exhaustive single-byte XOR + every truncation point
-        mutants = [
-            bytes(
-                blob[:pos] + bytes([blob[pos] ^ 0xFF]) + blob[pos + 1:]
-            )
-            for pos in range(len(blob))
-        ] + [blob[:cut] for cut in range(len(blob))]
-        # plus seeded multi-flips
-        for _ in range(2000):
-            m = bytearray(blob)
-            for _ in range(rng.randint(1, 4)):
-                m[rng.randint(len(m))] = rng.randint(256)
-            mutants.append(bytes(m))
-        for m in mutants:
-            try:
-                for record in read_file_records(m):
-                    decode_example(record)
-            except ValueError:
-                pass  # the declared route — anything else fails the test
+    for records, struct in (([ex, ex], multi), (scalar, STRUCT)):
+        decode = build_batch_decoder(struct)
+        for comp in (False, True):
+            blob = records_to_bytes(records, compress=comp)
+            # exhaustive single-byte XOR + every truncation point
+            mutants = [
+                bytes(
+                    blob[:pos] + bytes([blob[pos] ^ 0xFF]) + blob[pos + 1:]
+                )
+                for pos in range(len(blob))
+            ] + [blob[:cut] for cut in range(len(blob))]
+            # plus seeded multi-flips
+            for _ in range(2000):
+                m = bytearray(blob)
+                for _ in range(rng.randint(1, 4)):
+                    m[rng.randint(len(m))] = rng.randint(256)
+                mutants.append(bytes(m))
+            for m in mutants:
+                try:
+                    for record in read_file_records(m):
+                        decode_example(record)
+                except ValueError:
+                    pass  # the declared route — anything else fails the test
+                try:
+                    want = reference_rows(m, struct)
+                except REJECTED:
+                    want = None
+                try:
+                    got = decode(*read_shard(m))
+                except ValueError:
+                    assert want is None
+                else:
+                    assert want is not None
+                    assert_same(got.to_pylist(), want)
 
 
 def test_blas_topk_matches_generic_and_tolerates_nulls(spark):
