@@ -191,6 +191,17 @@ def remove(path: str) -> None:
     fs.delete(jpath, False)
 
 
+def listdir(path: str) -> list[str]:
+    """Entry names directly under directory ``path`` (missing -> [])."""
+    if is_local(path):
+        local = to_local(path)
+        return os.listdir(local) if os.path.isdir(local) else []
+    fs, jpath, _ = _hadoop(path)
+    if not fs.exists(jpath):
+        return []
+    return [status.getPath().getName() for status in fs.listStatus(jpath)]
+
+
 def remove_tree(path: str) -> None:
     """Recursive delete (directory trees; missing path is a no-op)."""
     if is_local(path):

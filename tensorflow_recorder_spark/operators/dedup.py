@@ -113,18 +113,6 @@ def shingle_expr(text_col: str, k: int = 5, pre_lowered: bool = False) -> str:
     )
 
 
-def _minhash_expr(shingles: str, seed: int) -> str:
-    """min over shingles of a 32-bit md5-prefix hash salted by ``seed``.
-
-    md5-based so the DuckDB oracle can compute the identical value; the
-    per-row cost is seeds x shingles hashes, all inside codegen.
-    """
-    return (
-        f"array_min(transform({shingles}, "
-        f"s -> cast(conv(substring(md5(concat('{seed}:', s)), 1, 8), 16, 10) as bigint)))"
-    )
-
-
 def minhash_signatures(
     df: DataFrame,
     text_col: str,

@@ -1619,11 +1619,6 @@ def scalar_quantize(
 # --------------------------------------------------------------------
 
 
-def _subvec_expr(vec_col: str, sub_id_col: str, sub_dim: int) -> str:
-    """slice() of one subspace; sub ids are 0-based, slice() is 1-based."""
-    return f"slice({vec_col}, {sub_id_col} * {sub_dim} + 1, {sub_dim})"
-
-
 def _sq_l2_expr(a: str, b: str) -> str:
     """Squared L2 distance between two equal-length arrays."""
     return (

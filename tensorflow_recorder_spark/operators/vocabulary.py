@@ -26,15 +26,36 @@ with identical output:
   rank order, window within ranges, broadcast count offsets). No single
   task ever holds the whole vocabulary.
 
-The apply is a broadcast hash join (vocab is fitted state), so no
-shuffle touches the fact table.
+The convert path fits every vocabulary in ONE driver collect
+(:func:`fit_vocabularies`): a single aggregate over the stacked
+(column, TRAIN value) pairs that also carries the caller's group keys
+(the split histogram, the image counters), ranked on the driver in the
+same count desc, value asc order. The fitted lists then apply as a JVM
+literal map (:func:`apply_fitted_vocabulary`), so no action re-runs the
+fit and no join stage is planned. Spark's map lookup scans its keys per
+row, so above :data:`LITERAL_VOCAB_LIMIT` values the list applies
+through :func:`apply_vocabulary`'s broadcast join instead. Either way
+no shuffle touches the fact table.
 """
 
 from __future__ import annotations
 
+from collections import Counter
+from collections.abc import Sequence
+
 from pyspark.sql import DataFrame, Window, functions as F
 
 from ..constants import OOV_INDEX, TRAIN
+
+# Largest vocabulary applied as a literal map; larger ones join. Spark's
+# map lookup compares the row's value with every key, so the literal's
+# cost grows with rows x values while the broadcast join pays a fixed
+# ~0.3 s per action. Measured per action on 4 cores (noop write of a
+# cached frame, literal / join): 600k rows at 100 values 0.14 / 0.35 s,
+# 500 values 0.28 / 0.34 s, 1,000 values 0.63 / 0.31 s; 6M rows at 100
+# values 0.62 / 0.91 s, 200 values 0.97 / 0.78 s. 128 keeps the literal
+# no slower than the join up to 6M rows.
+LITERAL_VOCAB_LIMIT = 128
 
 
 def fit_vocabulary(
@@ -159,3 +180,83 @@ def fit_and_apply_vocabularies(
         vocabs[column] = vocab
         out = apply_vocabulary(out, column, vocab)
     return out, vocabs
+
+
+def fit_vocabularies(
+    df: DataFrame,
+    vocab_columns: Sequence[str],
+    split_key: str | None = None,
+    train_value: str = TRAIN,
+    by: Sequence[str] = (),
+) -> tuple[dict[tuple, int], dict[str, list[str]]]:
+    """Fit every vocabulary of ``vocab_columns`` with one ``collect()``.
+
+    One aggregate groups by ``by``, the vocabulary column's position and
+    its value, the value counted only on ``train_value`` rows when
+    ``split_key`` is given. The columns are stacked with one
+    ``explode(array(struct(idx, value)))``, so rows outside TRAIN add
+    only |by groups| x |columns| groups. Returns ``(row counts per
+    by-tuple, {column: values in index order})``; the row counts come
+    from column 0's rows (every row, when there is no vocabulary column),
+    and each vocabulary is ranked count desc, value asc exactly as
+    :func:`fit_vocabulary` ranks it (Python ``str`` order is Spark's
+    UTF-8 byte order). NULLs do not enter a vocabulary.
+    """
+    by = list(by)
+    if vocab_columns:
+        entry = F.explode(
+            F.array(
+                *[
+                    F.struct(F.lit(i).alias("i"), F.col(c).cast("string").alias("v"))
+                    for i, c in enumerate(vocab_columns)
+                ]
+            )
+        ).alias("__e")
+        value = F.col("__e.v")
+        if split_key is not None:
+            value = F.when(F.col(split_key) == train_value, value)
+        stacked = df.select(*by, entry).select(
+            *by, F.col("__e.i").alias("__i"), value.alias("__v")
+        )
+    else:
+        stacked = df.select(
+            *by, F.lit(0).alias("__i"), F.lit(None).cast("string").alias("__v")
+        )
+    rows = stacked.groupBy(*by, "__i", "__v").count().collect()
+
+    groups: Counter = Counter()
+    freqs: list[Counter] = [Counter() for _ in vocab_columns]
+    for r in rows:
+        if r["__i"] == 0:
+            groups[tuple(r[k] for k in by)] += r["count"]
+        if r["__v"] is not None:
+            freqs[r["__i"]][r["__v"]] += r["count"]
+    vocabs = {
+        c: sorted(f, key=lambda v, f=f: (-f[v], v))
+        for c, f in zip(vocab_columns, freqs)
+    }
+    return dict(groups), vocabs
+
+
+def apply_fitted_vocabulary(
+    df: DataFrame, column: str, values: Sequence[str], oov_index: int = OOV_INDEX
+) -> DataFrame:
+    """Integerize ``column`` by a vocabulary fitted to a driver list
+    (value i -> i; NULL and unseen values -> ``oov_index``).
+
+    Up to :data:`LITERAL_VOCAB_LIMIT` values this is one JVM expression,
+    ``coalesce(map(values)[column], oov)``: no join, no extra job, and
+    the column keeps its position and a non-null bigint type, as the
+    join does. Larger vocabularies go through :func:`apply_vocabulary`.
+    """
+    if len(values) > LITERAL_VOCAB_LIMIT:
+        vocab = df.sparkSession.createDataFrame(
+            list(zip(values, range(len(values)))), "value string, index long"
+        )
+        return apply_vocabulary(df, column, vocab, oov_index)
+    if values:
+        pairs = [x for i, v in enumerate(values) for x in (F.lit(v), F.lit(i))]
+        index = F.create_map(*pairs)[F.col(column)].cast("long")
+    else:
+        index = F.lit(None).cast("long")
+    return df.withColumn(column, F.coalesce(index, F.lit(oov_index)))

@@ -12,14 +12,23 @@ Spark re-plan (SURVEY.md §4.2):
     planning. NO driver materialization of the data — the reference's
     ``df.values.tolist()`` (beam_pipeline.py:251) is exactly the pattern
     this engine exists to kill.
-  * Three driver-visible actions, each returning tiny results: the split
-    histogram (A1), the fitted state (vocab/scale — bounded by label
-    cardinality), and the write jobs' file manifests.
-  * The transformed frame is cached once and shared by all split writes
-    + counters, so the input is scanned once regardless of split count.
-  * Fitted state applies via broadcast join / literals — the fact table
-    never shuffles in this pipeline (split routing is a narrow map;
-    write sharding is the only repartition and only when requested).
+  * Driver-visible actions, each returning tiny results:
+      1. one aggregate over the cached frame (which it materializes)
+         returns the split histogram (A1), the image good/bad counters
+         and every TRAIN vocabulary's value counts (A2) — the whole fit;
+         with an image column the histogram is a separate count over
+         the *input* split (V8), run first;
+      2. the scale stats, only when ``scale_numeric`` is on;
+      3. the shard write, which returns its file manifest, and the
+         DISCARD CSV write.
+    The vocabulary assets are written from the driver lists, no job.
+  * The work frame is cached once and shared by the aggregate and every
+    write, so the input is scanned once regardless of split count.
+  * Fitted state applies as literals (a broadcast join only for a
+    vocabulary above ``LITERAL_VOCAB_LIMIT``), so no action re-runs the
+    fit and the fact table never shuffles in this pipeline (split
+    routing is a narrow map; write sharding is the only repartition and
+    only when requested).
 """
 
 from __future__ import annotations
@@ -36,7 +45,7 @@ from ..functions.partitioning import spread_to_parallelism
 from ..operators.image import extract_images
 from ..operators.scale import fit_and_apply_scale
 from ..operators.split import normalize_split, require_train, split_counts
-from ..operators.vocabulary import fit_and_apply_vocabularies
+from ..operators.vocabulary import apply_fitted_vocabulary, fit_vocabularies
 from ..schema import Schema
 from ..sinks.artifacts import (
     write_discarded,
@@ -109,12 +118,10 @@ def run_convert(
         work = extract_images(work, schema.image_uri_key, split_key)
     work = normalize_split(work, split_key)  # P1 (also covers P2 reroutes)
 
-    # ONE cache feeds everything downstream: the split histogram, every
-    # vocabulary/scale fit (each a TRAIN-subset action), the encode+write
-    # pass, and the discard sink. The transformed frame is deliberately
-    # NOT cached a second time — it is only a broadcast join away from
-    # ``work``, and re-deriving it per consumer is far cheaper than a
-    # second full materialization (measured ~2x on 600k rows).
+    # ONE cache feeds everything downstream: the fit aggregate, the
+    # scale fit, the encode+write pass, and the discard sink. The
+    # transformed frame is deliberately NOT cached a second time — it is
+    # only a literal projection away from ``work``.
     # Fan out BEFORE caching when the scan under-partitioned (small files
     # split at row-group granularity): the one-time shuffle happens at
     # cache materialization, and every downstream pass — including the
@@ -126,45 +133,50 @@ def run_convert(
     # scan pays one bounded repartition (functions/partitioning.py).
     work = spread_to_parallelism(work, spark.sparkContext.defaultParallelism)
     work = work.cache()
-
-    # Split histogram (A1) runs on the *input* split column, matching the
-    # reference which computes counts before image extraction can reroute
-    # failures (the V8 empty-split case). Without image extraction the
-    # cached frame IS the input-split frame, so the histogram doubles as
-    # the cache-materializing action.
-    if schema.image_uri_key:
-        counts = split_counts(normalize_split(typed, split_key), split_key)
-    else:
-        counts = split_counts(work, split_key)
-    require_train(counts)  # V3
-    input_rows = sum(counts.values())
-
-    # Fit on TRAIN, apply to all (A2/A3).
-    transformed, vocabs = fit_and_apply_vocabularies(
-        work, schema.vocabulary_columns(), split_key
-    )
-    scale_stats: dict[str, tuple[float, float]] = {}
-    if scale_numeric:
-        transformed, scale_stats = fit_and_apply_scale(
-            transformed, schema.scalable_columns(), split_key
-        )
-
-    job_name = get_job_name(job_label)
-    # URI-aware join/mkdir: output_dir may be file:/..., file://... or a
-    # remote scheme — os.path on the raw URI would create a literal
-    # "file:" tree under CWD (r3 verdict bug).
-    job_dir = fs.join(output_dir, job_name)
-    fs.makedirs(job_dir)
-
     try:
+        # Split histogram (A1) runs on the *input* split column, matching
+        # the reference which computes counts before image extraction can
+        # reroute failures (the V8 empty-split case). Without image
+        # extraction the cached frame IS the input-split frame, so the
+        # fit aggregate's per-split rows are the histogram.
+        image_ok = "__image_ok" if schema.image_uri_key else None
+        if image_ok:
+            counts = split_counts(normalize_split(typed, split_key), split_key)
+            require_train(counts)  # V3, before the image extract runs
+
+        # Fit on TRAIN (A2): one collect returns the histogram, the image
+        # counters (V5) and every vocabulary; the cache materializes here.
+        vocab_columns = schema.vocabulary_columns()
+        groups, vocabs = fit_vocabularies(
+            work,
+            vocab_columns,
+            split_key,
+            by=[split_key, image_ok] if image_ok else [split_key],
+        )
         good = bad = 0
-        if "__image_ok" in transformed.columns:
-            counter_row = transformed.agg(
-                F.count(F.when(F.col("__image_ok"), 1)).alias("good"),
-                F.count(F.when(~F.col("__image_ok"), 1)).alias("bad"),
-            ).collect()[0]
-            good, bad = counter_row["good"], counter_row["bad"]
-            transformed = transformed.drop("__image_ok")
+        if image_ok:
+            good = sum(n for (_, ok), n in groups.items() if ok is True)
+            bad = sum(n for (_, ok), n in groups.items() if ok is False)
+        else:
+            counts = {split: n for (split,), n in groups.items()}
+            require_train(counts)  # V3
+
+        # Apply to all (A3) as literals: no action re-runs the fit.
+        transformed = work.drop(image_ok) if image_ok else work
+        for column in vocab_columns:
+            transformed = apply_fitted_vocabulary(transformed, column, vocabs[column])
+        scale_stats: dict[str, tuple[float, float]] = {}
+        if scale_numeric:
+            transformed, scale_stats = fit_and_apply_scale(
+                transformed, schema.scalable_columns(), split_key
+            )
+
+        job_name = get_job_name(job_label)
+        # URI-aware join/mkdir: output_dir may be file:/..., file://... or
+        # a remote scheme — os.path on the raw URI would create a literal
+        # "file:" tree under CWD (r3 verdict bug).
+        job_dir = fs.join(output_dir, job_name)
+        fs.makedirs(job_dir)
 
         # Branch elision parity: a split is written iff it appeared in
         # the input histogram (beam_pipeline.py:274-280, 303-313) — even
@@ -182,14 +194,14 @@ def run_convert(
             transformed.where(F.col(split_key) == DISCARD), job_dir
         )  # K3
 
-        write_vocabulary_assets(job_dir, vocabs)  # K4
+        write_vocabulary_assets(job_dir, vocabs)  # K4, from driver lists
         if scale_stats:
             write_scale_stats(job_dir, scale_stats)
         write_schema_metadata(job_dir, schema, transformed.schema)
     finally:
         work.unpersist()
 
-    metrics = {"rows": input_rows, "good_images": good, "bad_images": bad}
+    metrics = {"rows": sum(counts.values()), "good_images": good, "bad_images": bad}
     logger.info("convert job %s complete: %s", job_name, metrics)
     return ConvertResult(
         job_id="spark-local", tfrecord_dir=job_dir, metrics=metrics, files=files

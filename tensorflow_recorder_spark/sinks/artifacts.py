@@ -35,16 +35,21 @@ def vocab_asset_path(job_dir: str, column: str) -> str:
     return fs.join(job_dir, VOCAB_ASSET_DIR, f"vocab_{column}_vocabulary")
 
 
-def write_vocabulary_assets(job_dir: str, vocabs: dict[str, DataFrame]) -> None:
+def write_vocabulary_assets(
+    job_dir: str, vocabs: dict[str, list[str] | DataFrame]
+) -> None:
     """Persist each fitted vocabulary as a text asset, one value per line
-    in index order. Vocabularies are fitted state (bounded, already
-    aggregated) — collecting them to the driver is the design, exactly as
+    in index order. A vocabulary is a driver list of values in index
+    order (no Spark job); a (value, index) DataFrame is still accepted
+    and collected first. Vocabularies are fitted state (bounded, already
+    aggregated) — holding them on the driver is the design, exactly as
     the reference materializes them into SavedModel assets."""
     fs.makedirs(fs.join(job_dir, VOCAB_ASSET_DIR))
     for column, vocab in vocabs.items():
-        rows = vocab.orderBy("index").collect()
+        if isinstance(vocab, DataFrame):
+            vocab = [r["value"] for r in vocab.orderBy("index").collect()]
         with fs.open_output(vocab_asset_path(job_dir, column), "w") as fh:
-            fh.write("\n".join(r["value"] for r in rows))
+            fh.write("\n".join(vocab))
 
 
 def read_vocabulary_asset(job_dir: str, column: str) -> list[str]:

@@ -224,7 +224,11 @@ def write_all_splits(
             }
         )
 
-    manifest = df.mapInPandas(write_partition, schema=out_schema).collect()
+    try:
+        manifest = df.mapInPandas(write_partition, schema=out_schema).collect()
+    except BaseException:
+        _remove_inprogress(job_dir, tuple(f".{s.lower()}-pid" for s in splits))
+        raise
 
     # Driver-side rename to contiguous shard names (metadata-only).
     results: dict[str, dict[str, int]] = {}
@@ -248,6 +252,16 @@ def write_all_splits(
             split_files[final] = n
         results[split_value] = split_files
     return results
+
+
+def _remove_inprogress(job_dir: str, prefixes: tuple[str, ...]) -> None:
+    """Driver-side cleanup of a failed write: the job's finished tasks
+    leave temp files that no rename will publish, and a task that raised
+    or was killed leaves a partial one. Only this write's temp names
+    (``prefixes``) are removed."""
+    for name in fs.listdir(job_dir):
+        if name.endswith(".inprogress") and name.startswith(prefixes):
+            fs.remove(fs.join(job_dir, name))
 
 
 def _write_partition_factory(
@@ -303,9 +317,13 @@ def write_split_tfrecords(
     rdd = split_df.rdd
     n = max(rdd.getNumPartitions(), 1)
     fs.makedirs(job_dir)
-    results = rdd.mapPartitionsWithIndex(
-        _write_partition_factory(job_dir, prefix, n, suffix, compression)
-    ).collect()
+    try:
+        results = rdd.mapPartitionsWithIndex(
+            _write_partition_factory(job_dir, prefix, n, suffix, compression)
+        ).collect()
+    except BaseException:
+        _remove_inprogress(job_dir, (f"{prefix}-",))
+        raise
     if skip_empty and results and all(count == 0 for _, count in results):
         for path, _ in results:
             fs.remove(path)

@@ -3,8 +3,9 @@
 
 Fit-on-train / apply-to-all becomes fit-offline / apply-online: the
 vocabulary (and scale stats) are fitted ONCE from a bounded TRAIN
-DataFrame, then every micro-batch is transformed with the broadcast
-fitted state and appended as TFRecord shards via ``foreachBatch``.
+DataFrame to driver lists, then every micro-batch is transformed with
+those lists as literals (``apply_fitted_vocabulary``, the same apply as
+batch convert) and appended as TFRecord shards via ``foreachBatch``.
 Never re-fit inside the stream — that would make output semantics
 depend on micro-batch boundaries.
 """
@@ -19,7 +20,7 @@ from pyspark.sql.streaming import StreamingQuery
 from ..constants import DISCARD, TRAIN
 from ..functions import fs
 from ..operators.split import normalize_split
-from ..operators.vocabulary import apply_vocabulary, fit_vocabulary
+from ..operators.vocabulary import apply_fitted_vocabulary, fit_vocabularies
 from ..schema import Schema
 from ..sinks.artifacts import write_schema_metadata, write_vocabulary_assets
 from ..sinks.tfrecord import encode_examples, write_split_tfrecords
@@ -44,19 +45,16 @@ def convert_stream(
     """
     split_key = schema.split_key
     vocab_cols = schema.vocabulary_columns()
-    vocabs = {c: fit_vocabulary(train_df, c) for c in vocab_cols}
+    _, vocabs = fit_vocabularies(train_df, vocab_cols)
 
     fs.makedirs(job_dir)
     write_vocabulary_assets(job_dir, vocabs)
     write_schema_metadata(job_dir, schema, schema.transformed_struct())
-    # Materialize fitted state once; micro-batches join against these
-    # small cached frames (broadcast on apply).
-    cached_vocabs = {c: v.cache() for c, v in vocabs.items()}
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         work = normalize_split(batch_df, split_key)
-        for c, vocab in cached_vocabs.items():
-            work = apply_vocabulary(work, c, vocab)
+        for c, vocab in vocabs.items():
+            work = apply_fitted_vocabulary(work, c, vocab)
         encoded = encode_examples(work, split_key)
         for split in (TRAIN, "VALIDATION", "TEST"):
             write_split_tfrecords(

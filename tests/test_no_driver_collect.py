@@ -20,7 +20,12 @@ ALLOWED = {
         "duplicate_clusters small-graph path: collect gated by an "
         "explicit counted edge threshold (driver_threshold)",
     ),
-    "plans/convert.py": (1, "single metrics row (one global agg)"),
+    "operators/vocabulary.py": (
+        1,
+        "fit_vocabularies: one row per (group key, vocab column, TRAIN "
+        "value) — fitted state bounded by label cardinality, plus "
+        "|splits| x |columns| rows outside TRAIN",
+    ),
     "sinks/tfrecord.py": (2, "per-shard manifest rows (num shards, not data)"),
     "sinks/artifacts.py": (1, "fitted vocabulary (bounded by top_k)"),
     "operators/split.py": (1, "split histogram (<= #splits rows)"),
