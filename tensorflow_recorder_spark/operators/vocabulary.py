@@ -54,7 +54,9 @@ from ..constants import OOV_INDEX, TRAIN
 # cached frame, literal / join): 600k rows at 100 values 0.14 / 0.35 s,
 # 500 values 0.28 / 0.34 s, 1,000 values 0.63 / 0.31 s; 6M rows at 100
 # values 0.62 / 0.91 s, 200 values 0.97 / 0.78 s. 128 keeps the literal
-# no slower than the join up to 6M rows.
+# no slower than the join up to 6M rows. That split point comes from
+# this microbenchmark only: no end-to-end benchmark workload has a
+# vocabulary above it, so the join side is covered by tests, not timed.
 LITERAL_VOCAB_LIMIT = 128
 
 
@@ -186,13 +188,12 @@ def fit_vocabularies(
     df: DataFrame,
     vocab_columns: Sequence[str],
     split_key: str | None = None,
-    train_value: str = TRAIN,
     by: Sequence[str] = (),
 ) -> tuple[dict[tuple, int], dict[str, list[str]]]:
     """Fit every vocabulary of ``vocab_columns`` with one ``collect()``.
 
     One aggregate groups by ``by``, the vocabulary column's position and
-    its value, the value counted only on ``train_value`` rows when
+    its value, the value counted only on TRAIN rows when
     ``split_key`` is given. The columns are stacked with one
     ``explode(array(struct(idx, value)))``, so rows outside TRAIN add
     only |by groups| x |columns| groups. Returns ``(row counts per
@@ -214,7 +215,7 @@ def fit_vocabularies(
         ).alias("__e")
         value = F.col("__e.v")
         if split_key is not None:
-            value = F.when(F.col(split_key) == train_value, value)
+            value = F.when(F.col(split_key) == TRAIN, value)
         stacked = df.select(*by, entry).select(
             *by, F.col("__e.i").alias("__i"), value.alias("__v")
         )
@@ -239,10 +240,10 @@ def fit_vocabularies(
 
 
 def apply_fitted_vocabulary(
-    df: DataFrame, column: str, values: Sequence[str], oov_index: int = OOV_INDEX
+    df: DataFrame, column: str, values: Sequence[str]
 ) -> DataFrame:
     """Integerize ``column`` by a vocabulary fitted to a driver list
-    (value i -> i; NULL and unseen values -> ``oov_index``).
+    (value i -> i; NULL and unseen values -> ``OOV_INDEX``).
 
     Up to :data:`LITERAL_VOCAB_LIMIT` values this is one JVM expression,
     ``coalesce(map(values)[column], oov)``: no join, no extra job, and
@@ -253,10 +254,10 @@ def apply_fitted_vocabulary(
         vocab = df.sparkSession.createDataFrame(
             list(zip(values, range(len(values)))), "value string, index long"
         )
-        return apply_vocabulary(df, column, vocab, oov_index)
+        return apply_vocabulary(df, column, vocab)
     if values:
         pairs = [x for i, v in enumerate(values) for x in (F.lit(v), F.lit(i))]
         index = F.create_map(*pairs)[F.col(column)].cast("long")
     else:
         index = F.lit(None).cast("long")
-    return df.withColumn(column, F.coalesce(index, F.lit(oov_index)))
+    return df.withColumn(column, F.coalesce(index, F.lit(OOV_INDEX)))

@@ -258,7 +258,11 @@ def _remove_inprogress(job_dir: str, prefixes: tuple[str, ...]) -> None:
     """Driver-side cleanup of a failed write: the job's finished tasks
     leave temp files that no rename will publish, and a task that raised
     or was killed leaves a partial one. Only this write's temp names
-    (``prefixes``) are removed."""
+    (``prefixes``) are removed.
+
+    Best-effort: Spark cancels the job's other tasks asynchronously, so
+    a task still running after the listing can open (or publish) a file
+    this cleanup does not see."""
     for name in fs.listdir(job_dir):
         if name.endswith(".inprogress") and name.startswith(prefixes):
             fs.remove(fs.join(job_dir, name))

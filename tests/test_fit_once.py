@@ -1,7 +1,8 @@
 """Fit-once convert: the one-aggregate fit and the literal apply must give
 the same assets, loaded values and schema.json as the lazy broadcast-join
 reference (``fit_and_apply_vocabularies`` + the DataFrame asset path);
-a convert whose write fails leaves no ``.inprogress`` file."""
+a write that fails, in either shard writer, leaves no ``.inprogress``
+file."""
 
 import csv
 import json
@@ -21,6 +22,7 @@ from tensorflow_recorder_spark.sinks.artifacts import (
     write_schema_metadata,
     write_vocabulary_assets,
 )
+from tensorflow_recorder_spark.sinks.tfrecord import write_split_tfrecords
 
 SCHEMA = trs.Schema(
     OrderedDict(
@@ -126,7 +128,8 @@ def _discarded(job_dir):
 
 def test_failed_write_leaves_no_inprogress_files(spark, tmp_path):
     # 1e300 overflows float32: the encoder raises in one task while the
-    # shard writer already holds open temp files in the others.
+    # shard writer (write_all_splits, auto shards) already holds open
+    # temp files in the others.
     schema = trs.Schema(
         OrderedDict([("split", tt.SplitKey), ("f", tt.FloatInput), ("label", tt.StringLabel)])
     )
@@ -139,3 +142,17 @@ def test_failed_write_leaves_no_inprogress_files(spark, tmp_path):
         name for _, _, names in os.walk(tmp_path) for name in names if name.endswith(".inprogress")
     ]
     assert leftovers == []
+
+
+def test_failed_split_write_leaves_no_inprogress_files(spark, tmp_path):
+    # Explicit shard counts and streaming write through
+    # write_split_tfrecords. Through convert the encoder would fail in the
+    # shuffle before any writer opens a file, so fail inside the write
+    # task itself: a NULL example raises after its temp file is open.
+    rows = [("TRAIN", b"x")] * 400
+    rows[399] = ("TRAIN", None)
+    encoded = spark.sparkContext.parallelize(rows, 4).toDF("split string, example binary")
+    job_dir = str(tmp_path / "job")
+    with pytest.raises(Exception):
+        write_split_tfrecords(encoded, job_dir, "train", "TRAIN", compression=None)
+    assert [n for n in os.listdir(job_dir) if n.endswith(".inprogress")] == []
