@@ -74,6 +74,10 @@ def _crc32c_block(arr: "_np.ndarray", lengths: "_np.ndarray") -> "_np.ndarray":
     return crc ^ _np.uint32(0xFFFFFFFF)
 
 
+# records at least this long are packed by row copies, not an index gather
+_ROW_COPY_BYTES = 4096
+
+
 def crc32c_many(records: list[bytes], block_bytes: int = 1 << 26) -> "_np.ndarray":
     """CRC-32C of many byte strings at once (uint32 array, input order).
 
@@ -109,6 +113,12 @@ def crc32c_many(records: list[bytes], block_bytes: int = 1 << 26) -> "_np.ndarra
             if not ln:
                 continue
             sel = _np.flatnonzero(blens == ln)
+            if ln >= _ROW_COPY_BYTES:
+                # long records: one slice copy per row; the gather below
+                # would build an int64 index 8x the size of the rows
+                for row in sel.tolist():
+                    arr[row, :ln] = flat[boffs[row] : boffs[row] + ln]
+                continue
             # row-fancy + column-slice assignment: a full 2D fancy
             # index here is ~10x slower (measured)
             arr[sel, :ln] = flat[

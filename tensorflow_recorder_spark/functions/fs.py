@@ -158,7 +158,11 @@ def makedirs(path: str, exist_ok: bool = True) -> None:
         os.makedirs(to_local(path), exist_ok=exist_ok)
         return
     fs, jpath, _ = _hadoop(path)
-    fs.mkdirs(jpath)  # Hadoop mkdirs is idempotent (exist_ok semantics)
+    # Hadoop mkdirs is idempotent, so exist_ok=False is a check first
+    # (not atomic against a concurrent creator, unlike the local path)
+    if not exist_ok and fs.exists(jpath):
+        raise FileExistsError(path)
+    fs.mkdirs(jpath)
 
 
 def exists(path: str) -> bool:

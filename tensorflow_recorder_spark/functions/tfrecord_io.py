@@ -174,7 +174,8 @@ def open_output(path: str, compressed: bool | str | None):
     """Open a TFRecord shard for writing. Compression is an explicit flag
     — legacy bool (True == gzip) or 'gzip' | 'zlib' | None — because
     writers stage shards under temp names, so extension sniffing would
-    silently mislabel; mtime=0 keeps gzip output byte-deterministic.
+    silently mislabel; mtime=0 and an empty FNAME (TF's own writer omits
+    it too) keep gzip output byte-deterministic and free of temp names.
 
     Level 6 (the zlib/gzip-CLI default), not Python's GzipFile default
     of 9: level 9 costs ~2x the CPU of 6 for ~1% smaller TFRecords —
@@ -187,7 +188,7 @@ def open_output(path: str, compressed: bool | str | None):
     codec = _normalize_compression(compressed)
     raw = fs.open_output(path, "wb")
     if codec == "gzip":
-        return _gzip_owning(raw, "wb", compresslevel=6, mtime=0)
+        return _gzip_owning(raw, "wb", filename="", compresslevel=6, mtime=0)
     if codec == "zlib":
         return _ZlibWriter(raw, level=6)
     return raw

@@ -19,16 +19,19 @@ Spark re-plan (SURVEY.md §4.2):
          with an image column the histogram is a separate count over
          the *input* split (V8), run first;
       2. the scale stats, only when ``scale_numeric`` is on;
-      3. the shard write, which returns its file manifest, and the
-         DISCARD CSV write.
+      3. the shard write: ONE job for every split and either shard
+         mode (sinks/tfrecord.write_all_splits), returning its rename
+         manifest;
+      4. the DISCARD CSV write.
     The vocabulary assets are written from the driver lists, no job.
+    The job dir is created exclusively and removed if a later step fails.
   * The work frame is cached once and shared by the aggregate and every
     write, so the input is scanned once regardless of split count.
   * Fitted state applies as literals (a broadcast join only for a
     vocabulary above ``LITERAL_VOCAB_LIMIT``), so no action re-runs the
     fit and the fact table never shuffles in this pipeline (split
-    routing is a narrow map; write sharding is the only repartition and
-    only when requested).
+    routing is a narrow map; the encoded frame's repartition on
+    (split, shard) for an explicit ``num_shards`` is the only one).
 """
 
 from __future__ import annotations
@@ -174,30 +177,36 @@ def run_convert(
         job_name = get_job_name(job_label)
         # URI-aware join/mkdir: output_dir may be file:/..., file://... or
         # a remote scheme — os.path on the raw URI would create a literal
-        # "file:" tree under CWD (r3 verdict bug).
+        # "file:" tree under CWD (r3 verdict bug). The job dir is created
+        # exclusively: a second convert with the same label in the same
+        # second must fail, not mix its shards into this one's.
         job_dir = fs.join(output_dir, job_name)
-        fs.makedirs(job_dir)
+        fs.makedirs(job_dir, exist_ok=False)
+        try:
+            # Branch elision parity: a split is written iff it appeared
+            # in the input histogram (beam_pipeline.py:274-280, 303-313)
+            # — even if image failures emptied it (V8). One job writes
+            # all splits.
+            encoded = encode_examples(transformed, split_key)
+            wanted = [s for s in OUTPUT_SPLITS if counts.get(s, 0) > 0]
+            files = write_all_splits(
+                encoded,
+                job_dir,
+                wanted,
+                compression=compression,
+                num_shards=num_shards,
+            )
+            write_discarded(
+                transformed.where(F.col(split_key) == DISCARD), job_dir
+            )  # K3
 
-        # Branch elision parity: a split is written iff it appeared in
-        # the input histogram (beam_pipeline.py:274-280, 303-313) — even
-        # if image failures emptied it (V8). One pass writes all splits.
-        encoded = encode_examples(transformed, split_key)
-        wanted = [s for s in OUTPUT_SPLITS if counts.get(s, 0) > 0]
-        files = write_all_splits(
-            encoded,
-            job_dir,
-            wanted,
-            compression=compression,
-            num_shards=num_shards,
-        )
-        write_discarded(
-            transformed.where(F.col(split_key) == DISCARD), job_dir
-        )  # K3
-
-        write_vocabulary_assets(job_dir, vocabs)  # K4, from driver lists
-        if scale_stats:
-            write_scale_stats(job_dir, scale_stats)
-        write_schema_metadata(job_dir, schema, transformed.schema)
+            write_vocabulary_assets(job_dir, vocabs)  # K4, from driver lists
+            if scale_stats:
+                write_scale_stats(job_dir, scale_stats)
+            write_schema_metadata(job_dir, schema, transformed.schema)
+        except BaseException:
+            fs.remove_tree(job_dir)  # a failed convert leaves no job dir
+            raise
     finally:
         work.unpersist()
 

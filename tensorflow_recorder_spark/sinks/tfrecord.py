@@ -7,17 +7,20 @@ write sharded, optionally gzip-compressed files named
 runner pick sharding (converter.py:290-291).
 
 Spark-first design:
-  * Row -> Example encoding happens in ``mapInPandas`` (Arrow-batched;
-    the per-row proto build is unavoidable — it IS the output format —
-    but framing/IO are amortized per partition, not per row).
-  * One encode pass is shared by all splits (the encoded frame is cached
-    by the caller); each split's write is a partition-parallel job with
-    zero driver materialization.
+  * Row -> Example encoding is one ``mapInArrow`` (Arrow-batched; the
+    per-row proto build is unavoidable — it IS the output format).
+  * ONE writer, ``write_all_splits``, serves batch convert (auto and
+    explicit shard counts) and the streaming sink: a single
+    ``mapInArrow`` job over the encoded ``(split, example)`` frame, in
+    which every task appends to one open temp file per ``(split, shard)``
+    key it sees. Only a rename manifest crosses to the driver.
   * ``num_shards=0`` keeps the encode partitioning (AQE-coalesced), so
-    shard count tracks data size; an explicit ``num_shards`` becomes a
-    ``repartition`` (round-robin) before the write.
-  * Executors write files directly (shared filesystem). A task retry can
-    leave a partial file that the retry overwrites — same-name
+    shard count tracks data size; an explicit ``num_shards`` assigns
+    every row a per-split round-robin shard index after the encode and
+    adds one ``repartition`` on (split, shard) before the write.
+  * Executors write files directly (shared filesystem) under dot-prefixed
+    temp names that no shard glob matches; the driver publishes them by
+    rename. A task retry overwrites its own temp file — same-name
     idempotent writes, acceptable for a direct local/DFS sink; a
     cluster deployment would route this through a commit protocol
     (note: this is the one place local-mode and cluster semantics
@@ -26,17 +29,24 @@ Spark-first design:
 
 from __future__ import annotations
 
+from collections.abc import Iterator, Sequence
+from contextlib import ExitStack
 
-from collections.abc import Iterator
-
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F, types as T
 
-from ..constants import GZIP_SUFFIX, TFRECORD_SUFFIX, ZLIB_SUFFIX
+from ..constants import GZIP_SUFFIX, OUTPUT_SPLITS, TFRECORD_SUFFIX, ZLIB_SUFFIX
 from ..functions import fs
 from ..functions.example_proto import build_batch_encoder
 from ..functions.partitioning import spread_to_parallelism
-from ..functions.tfrecord_io import frame_records, open_maybe_gzip, open_output
+from ..functions.tfrecord_io import frame_records, open_output
+
+# records framed per write call: bounds the framed copy of a batch
+_FRAME_CHUNK = 4096
+# one row per shard file a write task produced
+_MANIFEST = pa.schema(
+    [("split", pa.string()), ("shard", pa.int64()), ("path", pa.string()), ("n", pa.int64())]
+)
 
 # Spark simpleString -> Example feature kind
 _KIND_BY_TYPE = {
@@ -133,27 +143,34 @@ def encode_examples(
 def write_all_splits(
     encoded: DataFrame,
     job_dir: str,
-    splits: list[str],
+    splits: Sequence[str] = (),
     compression: str | None = "gzip",
     num_shards: int = 0,
+    name_tag: str = "",
 ) -> dict[str, dict[str, int]]:
-    """Write every split's Examples in ONE pass (K2, batch convert path).
+    """Write the Examples of every output split in ONE job (K2).
 
-    With ``num_shards=0`` (runner-chosen, the default) a single
-    Arrow-batched ``mapInPandas`` walks each partition once and appends
-    rows to at most |splits| open shard files, so the encoded frame is
-    scanned once regardless of split count. Shard files are written
-    under partition-id temp names and renamed by the driver to
-    contiguous ``<split>-SSSSS-of-NNNNN`` (a rename manifest, not data,
-    crosses to the driver). Splits that end up empty still get one
-    empty shard (V8 parity). Returns {split: {path: record_count}}.
+    Rows of TRAIN/VALIDATION/TEST are written; DISCARD rows never become
+    shards (they go to the discard CSV). Each task of one ``mapInArrow``
+    keeps an open temp file per ``(split, shard)`` key it sees and
+    returns a rename manifest; the driver renames the temp files to
+    ``<split><name_tag>-SSSSS-of-NNNNN``. Returns
+    {split: {path: record_count}}.
 
-    An explicit ``num_shards`` applies PER SPLIT — the reference's
-    ``WriteToTFRecord(num_shards=N)`` runs per split
-    (beam_pipeline.py:303-313), so every split gets exactly N shards.
-    That routes through one repartition+write job per split over the
-    cached encoded frame (a deliberate trade: exact shard counts cost
-    one scan per split; the auto path stays single-pass).
+    * ``num_shards=0`` (runner-chosen): the shard is the encode
+      partition, renamed contiguously per split.
+    * ``num_shards=N`` applies PER SPLIT — the reference's
+      ``WriteToTFRecord(num_shards=N)`` runs per split
+      (beam_pipeline.py:303-313). Every row gets a per-split
+      round-robin index out of N (:func:`_round_robin_shard`), then one
+      ``repartition`` on (split, shard) feeds the write, so the Python
+      encode keeps its own parallelism. A hash collision puts several
+      keys in one task; missing indices become empty shards.
+
+    Every split in ``splits`` gets shards even when it has no rows
+    (V8 parity: one empty shard, or N with ``num_shards``); a split
+    not listed gets shards only if it has rows — the streaming sink
+    lists none and tags each micro-batch through ``name_tag``.
 
     ``compression``: 'gzip' (default), 'zlib' (TF's ZLIB whole-file
     stream; reference infers it from the .zlib extension,
@@ -165,93 +182,114 @@ def write_all_splits(
         compression or "", TFRECORD_SUFFIX
     )
     fs.makedirs(job_dir)
+    frame = encoded.where(F.col("split").isin(list(OUTPUT_SPLITS)))
     if num_shards > 0:
-        encoded = encoded.cache()
-        try:
-            return {
-                split_value: write_split_tfrecords(
-                    encoded,
-                    job_dir,
-                    split_value.lower(),
-                    split_value,
-                    compression=compression,
-                    num_shards=num_shards,
-                )
-                for split_value in splits
-            }
-        finally:
-            encoded.unpersist()
-    df = encoded.withColumn("__pid", F.spark_partition_id())
-    wanted = set(splits)
-    compressed = compression
+        frame = frame.withColumn(
+            "shard", _round_robin_shard(num_shards)(F.col("split"))
+        ).repartition(num_shards * len(OUTPUT_SPLITS), "split", "shard")
 
-    out_schema = T.StructType(
-        [
-            T.StructField("split", T.StringType()),
-            T.StructField("path", T.StringType()),
-            T.StructField("n", T.LongType()),
-        ]
-    )
+    def write_partition(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        import numpy as np
+        import pyarrow.compute as pc
+        from pyspark import TaskContext
 
-    def write_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        handles: dict[str, tuple] = {}
-        counts: dict[str, int] = {}
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            pid = int(pdf["__pid"].iloc[0])
-            for split_value, sub in pdf.groupby("split"):
-                if split_value not in wanted:
-                    continue
-                entry = handles.get(split_value)
-                if entry is None:
-                    path = fs.join(
-                        job_dir, f".{split_value.lower()}-pid{pid:05d}{suffix}.inprogress"
-                    )
-                    entry = (open_output(path, compressed), path)
-                    handles[split_value] = entry
-                    counts[split_value] = 0
-                fh = entry[0]
-                fh.write(frame_records([bytes(b) for b in sub["example"]]))
-                counts[split_value] += len(sub)
-        for split_value, (fh, _) in handles.items():
-            fh.close()
-        yield pd.DataFrame(
-            {
-                "split": list(handles),
-                "path": [p for _, p in handles.values()],
-                "n": [counts[s] for s in handles],
-            }
+        pid = TaskContext.get().partitionId()
+        handles: dict[tuple[str, int], list] = {}  # key -> [fh, path, n]
+        with ExitStack() as stack:
+            for rb in batches:
+                split = pc.dictionary_encode(rb.column("split"))
+                names = split.dictionary.to_pylist()
+                keys = split.indices.to_numpy(zero_copy_only=False).astype(np.int64)
+                if num_shards > 0:
+                    keys = keys * num_shards + rb.column("shard").to_numpy()
+                unique = np.unique(keys).tolist()
+                for key in unique:
+                    rows = rb.column("example")
+                    if len(unique) > 1:
+                        rows = rows.take(np.flatnonzero(keys == key))
+                    code, shard = divmod(key, num_shards) if num_shards > 0 else (key, pid)
+                    entry = handles.get((names[code], shard))
+                    if entry is None:
+                        prefix = f"{names[code].lower()}{name_tag}"
+                        path = fs.join(job_dir, f".{prefix}-{shard:05d}{suffix}.inprogress")
+                        fh = stack.enter_context(open_output(path, compression))
+                        entry = handles[(names[code], shard)] = [fh, path, 0]
+                    for start in range(0, len(rows), _FRAME_CHUNK):
+                        chunk = rows.slice(start, _FRAME_CHUNK).to_pylist()
+                        entry[0].write(frame_records(chunk))
+                    entry[2] += len(rows)
+        yield pa.RecordBatch.from_pylist(
+            [
+                {"split": split, "shard": shard, "path": path, "n": n}
+                for (split, shard), (_, path, n) in handles.items()
+            ],
+            schema=_MANIFEST,
         )
 
     try:
-        manifest = df.mapInPandas(write_partition, schema=out_schema).collect()
+        manifest = frame.mapInArrow(
+            write_partition, schema="split string, shard long, path string, n long"
+        ).collect()
     except BaseException:
-        _remove_inprogress(job_dir, tuple(f".{s.lower()}-pid" for s in splits))
+        _remove_inprogress(
+            job_dir, tuple(f".{s.lower()}{name_tag}-" for s in OUTPUT_SPLITS)
+        )
         raise
 
-    # Driver-side rename to contiguous shard names (metadata-only).
-    results: dict[str, dict[str, int]] = {}
-    by_split: dict[str, list] = {}
+    # Driver-side rename to final shard names (metadata-only), then an
+    # empty file for every shard a split is owed but no task wrote.
+    by_split: dict[str, dict[int, tuple[str, int]]] = {s: {} for s in splits}
     for row in manifest:
-        by_split.setdefault(row["split"], []).append((row["path"], row["n"]))
-    for split_value in splits:
-        shards = sorted(by_split.get(split_value, []))
-        prefix = split_value.lower()
-        if not shards:  # V8: empty-but-present split output
-            path = fs.join(job_dir, f"{prefix}-00000-of-00001{suffix}")
-            with open_output(path, compressed):
-                pass
-            results[split_value] = {path: 0}
-            continue
-        k = len(shards)
-        split_files: dict[str, int] = {}
-        for i, (tmp, n) in enumerate(shards):
+        by_split.setdefault(row["split"], {})[row["shard"]] = (row["path"], row["n"])
+    results: dict[str, dict[str, int]] = {}
+    for split_value, written in by_split.items():
+        if num_shards > 0:
+            k = num_shards
+        else:  # contiguous renumbering of the partition ids
+            written = dict(enumerate(written[pid] for pid in sorted(written)))
+            k = max(len(written), 1)
+        prefix = f"{split_value.lower()}{name_tag}"
+        files: dict[str, int] = {}
+        for i in range(k):
             final = fs.join(job_dir, f"{prefix}-{i:05d}-of-{k:05d}{suffix}")
-            fs.replace(tmp, final)
-            split_files[final] = n
-        results[split_value] = split_files
+            tmp, n = written.get(i, (None, 0))
+            if tmp is None:
+                with open_output(final, compression):
+                    pass
+            else:
+                fs.replace(tmp, final)
+            files[final] = n
+        results[split_value] = files
     return results
+
+
+def _round_robin_shard(num_shards: int):
+    """Arrow UDF ``split -> shard index`` in [0, num_shards): within each
+    task every split counts its own rows round-robin, starting at the
+    partition id, so per split the shards' record counts differ by at
+    most the number of input partitions — the balance of the old
+    filter-then-``repartition(N)`` per split. Only the split column
+    crosses to Python."""
+
+    def shard(batches: Iterator[pa.Array]) -> Iterator[pa.Array]:
+        import numpy as np
+        import pyarrow.compute as pc
+        from pyspark import TaskContext
+
+        next_index: dict[str, int] = {}
+        first = TaskContext.get().partitionId()
+        for split in batches:
+            codes = pc.dictionary_encode(split)
+            indices = codes.indices.to_numpy(zero_copy_only=False)
+            out = np.empty(len(indices), dtype=np.int32)
+            for code, value in enumerate(codes.dictionary.to_pylist()):
+                rows = np.flatnonzero(indices == code)
+                start = next_index.get(value, first)
+                out[rows] = (start + np.arange(len(rows))) % num_shards
+                next_index[value] = start + len(rows)
+            yield pa.array(out)
+
+    return F.arrow_udf(shard, "int").asNondeterministic()
 
 
 def _remove_inprogress(job_dir: str, prefixes: tuple[str, ...]) -> None:
@@ -261,82 +299,8 @@ def _remove_inprogress(job_dir: str, prefixes: tuple[str, ...]) -> None:
     (``prefixes``) are removed.
 
     Best-effort: Spark cancels the job's other tasks asynchronously, so
-    a task still running after the listing can open (or publish) a file
-    this cleanup does not see."""
+    a task still running after the listing can open a file this cleanup
+    does not see."""
     for name in fs.listdir(job_dir):
         if name.endswith(".inprogress") and name.startswith(prefixes):
             fs.remove(fs.join(job_dir, name))
-
-
-def _write_partition_factory(
-    job_dir: str, prefix: str, num_shards: int, suffix: str, compressed: str | None
-):
-    def write_partition(index: int, rows) -> Iterator[tuple[str, int]]:
-        path = fs.join(
-            job_dir, f"{prefix}-{index:05d}-of-{num_shards:05d}{suffix}"
-        )
-        count = 0
-        tmp = path + ".inprogress"
-        with open_output(tmp, compressed) as fh:
-            chunk: list[bytes] = []
-            for row in rows:
-                chunk.append(bytes(row["example"]))
-                if len(chunk) >= 4096:
-                    fh.write(frame_records(chunk))
-                    count += len(chunk)
-                    chunk = []
-            if chunk:
-                fh.write(frame_records(chunk))
-                count += len(chunk)
-        fs.replace(tmp, path)  # atomic publish per shard
-        yield path, count
-
-    return write_partition
-
-
-def write_split_tfrecords(
-    encoded: DataFrame,
-    job_dir: str,
-    prefix: str,
-    split_value: str,
-    compression: str | None = "gzip",
-    num_shards: int = 0,
-    skip_empty: bool = False,
-) -> dict[str, int]:
-    """Write one split's Examples as sharded TFRecord files (K2).
-
-    Returns {file_path: record_count}. Empty splits produce one empty
-    shard file — the reference's empty-but-present output parity (V8,
-    beam_pipeline.py:269-273) — unless ``skip_empty`` (streaming
-    appends, where per-batch empty shards would accumulate).
-    """
-    if compression not in (None, "", "gzip", "zlib"):
-        raise ValueError(f"unsupported TFRecord compression {compression!r}")
-    suffix = {"gzip": GZIP_SUFFIX, "zlib": ZLIB_SUFFIX}.get(
-        compression or "", TFRECORD_SUFFIX
-    )
-    split_df = encoded.where(F.col("split") == split_value).select("example")
-    if num_shards > 0:
-        split_df = split_df.repartition(num_shards)
-    rdd = split_df.rdd
-    n = max(rdd.getNumPartitions(), 1)
-    fs.makedirs(job_dir)
-    try:
-        results = rdd.mapPartitionsWithIndex(
-            _write_partition_factory(job_dir, prefix, n, suffix, compression)
-        ).collect()
-    except BaseException:
-        _remove_inprogress(job_dir, (f"{prefix}-",))
-        raise
-    if skip_empty and results and all(count == 0 for _, count in results):
-        for path, _ in results:
-            fs.remove(path)
-        return {}
-    if not results:  # zero partitions: still touch one empty shard (V8)
-        if skip_empty:
-            return {}
-        path = fs.join(job_dir, f"{prefix}-00000-of-00001{suffix}")
-        with open_output(path, compression):
-            pass
-        results = [(path, 0)]
-    return dict(results)

@@ -26,7 +26,7 @@ from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession, types as T
 
-from ..constants import OUTPUT_SPLITS
+from ..constants import GZIP_SUFFIX, OUTPUT_SPLITS, TFRECORD_SUFFIX, ZLIB_SUFFIX
 from ..functions import fs
 from ..functions.example_proto import build_batch_decoder
 from ..functions.tfrecord_io import read_shard
@@ -50,13 +50,19 @@ def read_tfrecords(
 
 
 def split_files(job_dir: str, split: str) -> list[str]:
-    """Glob one split's shard files (reference dataset_loader.py:52-69).
+    """Glob one split's finished shard files (reference
+    dataset_loader.py:52-69): only the ``.tfrecord[.gz|.zlib]`` names a
+    writer publishes, never a temp or partial file beside them.
 
     ``file:``/``file://`` URIs are globbed on their local form — glob on
     the raw URI string would silently match nothing."""
     if fs.is_local(job_dir):
         job_dir = fs.to_local(job_dir)
-    return sorted(globlib.glob(os.path.join(job_dir, f"{split.lower()}-*")))
+    return sorted(
+        path
+        for path in globlib.glob(os.path.join(job_dir, f"{split.lower()}-*"))
+        if path.endswith((TFRECORD_SUFFIX, GZIP_SUFFIX, ZLIB_SUFFIX))
+    )
 
 
 def load(spark: SparkSession, tfrecord_dir: str) -> dict[str, DataFrame]:

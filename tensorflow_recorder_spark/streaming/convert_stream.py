@@ -14,16 +14,15 @@ from __future__ import annotations
 
 from typing import Any
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
-from ..constants import DISCARD, TRAIN
 from ..functions import fs
 from ..operators.split import normalize_split
 from ..operators.vocabulary import apply_fitted_vocabulary, fit_vocabularies
 from ..schema import Schema
 from ..sinks.artifacts import write_schema_metadata, write_vocabulary_assets
-from ..sinks.tfrecord import encode_examples, write_split_tfrecords
+from ..sinks.tfrecord import encode_examples, write_all_splits
 
 
 def convert_stream(
@@ -38,10 +37,10 @@ def convert_stream(
     """Incrementally convert ``stream`` to TFRecords under ``job_dir``.
 
     ``train_df`` (bounded) supplies the fitted vocabulary state up
-    front; each micro-batch is split-routed, transformed, and written as
-    one shard per split per batch (shard name carries the batch id so
-    appends never collide; exactly-once comes from foreachBatch +
-    idempotent same-name writes).
+    front; each micro-batch is split-routed, transformed, and written in
+    one job as one shard per non-empty split (the shard name carries the
+    batch id so appends never collide; exactly-once comes from
+    foreachBatch + idempotent same-name writes).
     """
     split_key = schema.split_key
     vocab_cols = schema.vocabulary_columns()
@@ -55,17 +54,13 @@ def convert_stream(
         work = normalize_split(batch_df, split_key)
         for c, vocab in vocabs.items():
             work = apply_fitted_vocabulary(work, c, vocab)
-        encoded = encode_examples(work, split_key)
-        for split in (TRAIN, "VALIDATION", "TEST"):
-            write_split_tfrecords(
-                encoded,
-                job_dir,
-                f"{split.lower()}-batch{batch_id:06d}",
-                split,
-                compression=compression,
-                num_shards=1,
-                skip_empty=True,
-            )
+        write_all_splits(
+            encode_examples(work, split_key),
+            job_dir,
+            compression=compression,
+            num_shards=1,
+            name_tag=f"-batch{batch_id:06d}",
+        )
 
     writer = stream.writeStream.foreachBatch(process_batch).outputMode("append")
     if checkpoint_dir:

@@ -10,6 +10,7 @@ import pytest
 
 import tensorflow_recorder_spark as trs
 from tensorflow_recorder_spark import types as tt
+from tensorflow_recorder_spark.functions.tfrecord_io import read_file_records
 from tensorflow_recorder_spark.sinks.artifacts import read_vocabulary_asset
 
 
@@ -65,6 +66,18 @@ def test_convert_num_shards_and_uncompressed(spark, image_pdf, tmp_path):
             f"{prefix}-00000-of-00002.tfrecord",
             f"{prefix}-00001-of-00002.tfrecord",
         ], got
+    loaded = trs.load(result["tfrecord_dir"], spark=spark)
+    expected = image_pdf[image_pdf["split"] != "FOO"]["split"].value_counts().to_dict()
+    assert {split: df.count() for split, df in loaded.items()} == expected
+    # shards of a split are balanced to within one record per encode
+    # partition (the work frame is spread to the default parallelism)
+    for prefix in ("train", "validation", "test"):
+        sizes = [
+            len(list(read_file_records(os.path.join(result["tfrecord_dir"], f))))
+            for f in files
+            if f.startswith(f"{prefix}-")
+        ]
+        assert max(sizes) - min(sizes) <= spark.sparkContext.defaultParallelism, sizes
 
 
 def test_convert_zlib_compression_round_trips(spark, image_pdf, tmp_path):

@@ -1,8 +1,8 @@
 """Fit-once convert: the one-aggregate fit and the literal apply must give
 the same assets, loaded values and schema.json as the lazy broadcast-join
 reference (``fit_and_apply_vocabularies`` + the DataFrame asset path);
-a write that fails, in either shard writer, leaves no ``.inprogress``
-file."""
+a write that fails, at auto or explicit shard counts, leaves no
+``.inprogress`` file and a failed convert no job dir."""
 
 import csv
 import json
@@ -22,7 +22,7 @@ from tensorflow_recorder_spark.sinks.artifacts import (
     write_schema_metadata,
     write_vocabulary_assets,
 )
-from tensorflow_recorder_spark.sinks.tfrecord import write_split_tfrecords
+from tensorflow_recorder_spark.sinks.tfrecord import write_all_splits
 
 SCHEMA = trs.Schema(
     OrderedDict(
@@ -127,32 +127,34 @@ def _discarded(job_dir):
 
 
 def test_failed_write_leaves_no_inprogress_files(spark, tmp_path):
-    # 1e300 overflows float32: the encoder raises in one task while the
-    # shard writer (write_all_splits, auto shards) already holds open
-    # temp files in the others.
+    # 1e300 overflows float32: the encoder raises in one task while, with
+    # auto shards, the writer already holds open temp files in the others
+    # (with num_shards it fails in the shuffle before any file opens).
     schema = trs.Schema(
         OrderedDict([("split", tt.SplitKey), ("f", tt.FloatInput), ("label", tt.StringLabel)])
     )
     rows = [("TRAIN", float(i), "a") for i in range(4000)]
     rows[1234] = ("TRAIN", 1e300, "a")
     df = spark.createDataFrame(rows, "split string, f double, label string").repartition(8)
-    with pytest.raises(Exception):
-        trs.convert(df, output_dir=str(tmp_path), schema=schema, spark=spark)
-    leftovers = [
-        name for _, _, names in os.walk(tmp_path) for name in names if name.endswith(".inprogress")
-    ]
-    assert leftovers == []
+    for num_shards in (0, 2):
+        out = tmp_path / str(num_shards)
+        with pytest.raises(Exception):
+            trs.convert(df, output_dir=str(out), schema=schema, spark=spark, num_shards=num_shards)
+        leftovers = [
+            name for _, _, names in os.walk(out) for name in names if name.endswith(".inprogress")
+        ]
+        assert leftovers == []
+        assert [n for n in os.listdir(out) if n.startswith("tfrecorder-")] == []
 
 
 def test_failed_split_write_leaves_no_inprogress_files(spark, tmp_path):
-    # Explicit shard counts and streaming write through
-    # write_split_tfrecords. Through convert the encoder would fail in the
-    # shuffle before any writer opens a file, so fail inside the write
-    # task itself: a NULL example raises after its temp file is open.
+    # Through convert an explicit-shard write fails in the encoder, before
+    # any writer opens a file, so call the writer itself: a NULL example
+    # raises after its temp file is open.
     rows = [("TRAIN", b"x")] * 400
     rows[399] = ("TRAIN", None)
     encoded = spark.sparkContext.parallelize(rows, 4).toDF("split string, example binary")
     job_dir = str(tmp_path / "job")
     with pytest.raises(Exception):
-        write_split_tfrecords(encoded, job_dir, "train", "TRAIN", compression=None)
+        write_all_splits(encoded, job_dir, ["TRAIN"], compression=None, num_shards=2)
     assert [n for n in os.listdir(job_dir) if n.endswith(".inprogress")] == []

@@ -41,10 +41,13 @@ def test_crc32c_many_matches_scalar():
 
     random.seed(11)
     # mixed sizes incl. empty and one record big enough to force its own
-    # padding block when block_bytes is tiny
-    recs = [os.urandom(random.choice([0, 1, 8, 255, 256, 4093])) for _ in range(500)]
-    vec = crc32c_many(recs, block_bytes=1 << 12)
-    assert [int(v) for v in vec] == [crc32c(r) for r in recs]
+    # padding block when block_bytes is tiny; records from 4096 bytes up
+    # are packed by row copies, shorter ones by an index gather
+    sizes = [0, 1, 8, 255, 256, 4093, 4096, 5000]
+    recs = [os.urandom(random.choice(sizes)) for _ in range(500)]
+    for block_bytes in (1 << 12, 1 << 26):
+        vec = crc32c_many(recs, block_bytes=block_bytes)
+        assert [int(v) for v in vec] == [crc32c(r) for r in recs]
 
 
 def test_frame_records_matches_write_record():

@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import Row, functions as F
 
 import tensorflow_recorder_spark.types as tt
+from tensorflow_recorder_spark.functions.tfrecord_io import read_file_records
 from tensorflow_recorder_spark.schema import Schema
 from tensorflow_recorder_spark.sources.tfrecord import load as load_tfr
 from tensorflow_recorder_spark.streaming import (
@@ -94,6 +95,13 @@ def test_convert_stream_foreachbatch(spark, tmp_path):
     assert any(f.startswith("test-batch") for f in files)
     # FOO routed to DISCARD -> no validation/discard output files
     assert not any(f.startswith("validation-") for f in files)
+    # one job per micro-batch writes only non-empty shards, and publishes
+    # every temp file it opened
+    shards = [f for f in files if ".tfrecord" in f]
+    assert not any(f.endswith(".inprogress") for f in files), files
+    assert all(
+        sum(1 for _ in read_file_records(os.path.join(job_dir, f))) > 0 for f in shards
+    ), shards
 
     splits = load_tfr(spark, job_dir)
     assert splits["TRAIN"].count() == 2
