@@ -143,11 +143,15 @@ BATCH_STRUCT = T.StructType([
 def explicit_targets() -> dict:
     """Surfaces the export scan cannot see: ``build_batch_decoder``
     takes a schema, so it is bound to BATCH_STRUCT and fed whole
-    shards the way the load path feeds it."""
+    shards the way the load path feeds it; ``record_offsets`` is not a
+    ``read_*`` name, and its batch CRC verify is bound on."""
     decode = example_proto.build_batch_decoder(BATCH_STRUCT)
     return {
         "example_proto.build_batch_decoder": (
             lambda blob: decode(*tfrecord_io.read_shard(blob))
+        ),
+        "tfrecord_io.record_offsets(verify=True)": (
+            lambda blob: tfrecord_io.record_offsets(blob, verify=True)
         ),
     }
 

@@ -91,7 +91,12 @@ def _copy_logfile(job_dir: str, logfile: str = LOG_FILE) -> str | None:
 
 def load(tfrecord_dir: str, spark: SparkSession | None = None) -> dict[str, DataFrame]:
     """TFRecord dir -> {split: DataFrame} (C5; reference returns
-    {split: tf.data.Dataset})."""
+    {split: tf.data.Dataset}).
+
+    Both CRCs of every record are verified; a corrupt shard fails the
+    Spark job with the reader's ``ValueError``. Row order across a split's shards is
+    unspecified: ``binaryFile`` packs files into partitions in its own
+    order, not by shard name."""
     return load_tfrecords(spark or get_spark(), tfrecord_dir)
 
 

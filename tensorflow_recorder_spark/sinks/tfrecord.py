@@ -215,8 +215,7 @@ def write_all_splits(
                         fh = stack.enter_context(open_output(path, compression))
                         entry = handles[(names[code], shard)] = [fh, path, 0]
                     for start in range(0, len(rows), _FRAME_CHUNK):
-                        chunk = rows.slice(start, _FRAME_CHUNK).to_pylist()
-                        entry[0].write(frame_records(chunk))
+                        entry[0].write(frame_records(rows.slice(start, _FRAME_CHUNK)))
                     entry[2] += len(rows)
         yield pa.RecordBatch.from_pylist(
             [

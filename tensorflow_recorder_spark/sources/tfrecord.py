@@ -10,8 +10,8 @@ Spark-first design: files are scanned with the distributed ``binaryFile``
 source (one task per file; TFRecord files are the write-side shards, so
 file-level parallelism equals write-side shard parallelism) and parsed in
 ``mapInArrow``, one Arrow RecordBatch per file. Each shard is
-decompressed and unframed in one offsets pass
-(tfrecord_io.read_shard), then decoded column-wise by the batch Example
+decompressed, unframed in one offsets pass and CRC-verified in one
+batch (tfrecord_io.read_shard), then decoded column-wise by the batch Example
 decoder compiled for the persisted transformed StructType
 (example_proto.build_batch_decoder, replacing TFTransformOutput): the
 encoder's canonical layout is parsed in numpy, and any record outside it
@@ -69,7 +69,15 @@ def load(spark: SparkSession, tfrecord_dir: str) -> dict[str, DataFrame]:
     """TFRecords -> {split: DataFrame} (C5/S5).
 
     Mirrors ``tfrecorder.load``: validates layout, excludes DISCARD,
-    returns only splits that have files."""
+    returns only splits that have files. Every record's header and
+    payload CRCs are checked (``read_shard``), so a corrupt shard fails
+    the Spark job with a ``ValueError`` rather than yielding wrong
+    values.
+
+    Row order across a split's shards is unspecified: ``binaryFile``
+    packs the files into partitions in its own order, not by shard
+    name, and rows follow that packing. Within one shard, rows keep
+    their write order."""
     validate_job_dir(tfrecord_dir)
     _, struct = read_schema_metadata(tfrecord_dir)
     out: dict[str, DataFrame] = {}

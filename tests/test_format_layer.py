@@ -165,3 +165,208 @@ def test_mode_channel_mappings():
     assert mode_to_channel("CMYK") == 3
     assert mode_to_channel("RGBA") == 3
     assert channel_to_mode(4) == "RGB"
+
+
+# ---------------------------------------------------- span kernel parity
+
+import io  # noqa: E402
+import random  # noqa: E402
+import zlib  # noqa: E402
+
+import numpy as np  # noqa: E402
+import pyarrow as pa  # noqa: E402
+from hypothesis import given, settings, strategies as st  # noqa: E402
+
+from tensorflow_recorder_spark.functions.crc32c import (  # noqa: E402
+    CHUNK,
+    crc32c_fixed,
+    crc32c_spans,
+)
+from tensorflow_recorder_spark.functions.tfrecord_io import (  # noqa: E402
+    read_shard,
+    record_offsets,
+    write_record,
+)
+
+# every head-piece width, one chunk either side of its edges, several
+# chunks, and a record long enough for many advance bits
+_SPAN_LENGTHS = st.one_of(
+    st.sampled_from([0, 0, 1, 2, 3, CHUNK - 1, CHUNK, CHUNK + 1, 2 * CHUNK + 7, 70_000]),
+    st.integers(0, 5 * CHUNK),
+)
+
+
+def _payloads(lengths, seed):
+    rng = random.Random(seed)
+    return [rng.randbytes(n) for n in lengths]
+
+
+@settings(max_examples=60, deadline=None)
+@given(
+    lengths=st.lists(_SPAN_LENGTHS, max_size=12),
+    lead=st.integers(0, CHUNK + 3),
+    block_bytes=st.sampled_from([1, 7, CHUNK, 3 * CHUNK + 1, 1 << 20]),
+    seed=st.integers(0, 2**32),
+)
+def test_crc32c_spans_matches_scalar(lengths, lead, block_bytes, seed):
+    recs = _payloads(lengths, seed)
+    # the first span starts at ``lead``, after bytes that must not count
+    buf = bytes(i * 7 % 256 for i in range(lead)) + b"".join(recs)
+    starts = lead + np.cumsum([0] + lengths[:-1], dtype=np.int64)
+    expected = [crc32c(r) for r in recs]
+    got = crc32c_spans(buf, starts, np.array(lengths, dtype=np.int64), block_bytes)
+    assert got.dtype == np.uint32
+    assert [int(v) for v in got] == expected
+    # the same spans in reverse order, and through the list wrapper
+    assert [int(v) for v in crc32c_spans(buf, starts[::-1], lengths[::-1], block_bytes)] == (
+        expected[::-1]
+    )
+    assert [int(v) for v in crc32c_many(recs, block_bytes=block_bytes)] == expected
+
+
+def test_crc32c_spans_of_a_sliced_arrow_array():
+    recs = _payloads([5, CHUNK + 1, 0, 3 * CHUNK, 1000, 2], seed=3)
+    array = pa.array([b"skipped", b"x" * 300] + recs, type=pa.binary()).slice(2)
+    assert array.offset == 2
+    _, offsets, data = array.buffers()
+    offsets = np.frombuffer(offsets, dtype=np.int32)[array.offset : array.offset + len(array) + 1]
+    assert offsets[0] > 0  # the first span does not start at 0
+    got = crc32c_spans(data, offsets[:-1], np.diff(offsets), block_bytes=CHUNK)
+    assert [int(v) for v in got] == [crc32c(r) for r in recs]
+
+
+def test_crc32c_fixed_matches_scalar():
+    rows = np.random.default_rng(5).integers(0, 256, (300, 2 * CHUNK + 3), dtype=np.uint8)
+    for width in (0, 1, 8, CHUNK, 2 * CHUNK + 3):
+        packed = rows[:, :width]  # not contiguous: the kernel packs it
+        assert [int(v) for v in crc32c_fixed(packed)] == [
+            crc32c(row.tobytes()) for row in packed
+        ]
+
+
+def test_frame_records_same_bytes_from_arrow_and_list():
+    recs = _payloads([0, 1, 8, CHUNK - 1, CHUNK, CHUNK + 1, 4096, 70_000, 0, 300], seed=9)
+    buf = io.BytesIO()
+    for r in recs:
+        write_record(buf, r)
+    expected = buf.getvalue()
+    assert frame_records(recs) == expected
+    for kind in (pa.binary(), pa.large_binary()):
+        array = pa.array([b"head", b""] + recs + [b"tail"], type=kind)
+        assert frame_records(array.slice(2, len(recs))) == expected
+    assert frame_records(pa.array([], type=pa.binary())) == b""
+    with pytest.raises(ValueError):
+        frame_records(pa.array([b"a", None], type=pa.binary()))
+
+
+# ---------------------------------------------------- CRC verify on read
+
+
+def _stream(recs):
+    buf = io.BytesIO()
+    for r in recs:
+        write_record(buf, r)
+    return bytearray(buf.getvalue())
+
+
+def _payload_offset(recs, i):
+    return sum(16 + len(r) for r in recs[:i]) + 12
+
+
+def test_record_offsets_verify_names_the_first_bad_record():
+    recs = _payloads([10, 200, 3, 5000, 7], seed=1)
+    clean = bytes(_stream(recs))
+    starts, lengths = record_offsets(clean, verify=True)
+    assert lengths.tolist() == [len(r) for r in recs]
+    # payload bit flip in record 1, header CRC flip in record 3
+    data = _stream(recs)
+    data[_payload_offset(recs, 1) + 50] ^= 0x10
+    data[_payload_offset(recs, 3) - 2] ^= 0x01
+    with pytest.raises(ValueError, match=f"payload at offset {_payload_offset(recs, 1)}$"):
+        record_offsets(bytes(data), verify=True)
+    record_offsets(bytes(data), verify=False)  # framing alone still holds
+    data = _stream(recs)
+    data[_payload_offset(recs, 3) - 2] ^= 0x01
+    with pytest.raises(ValueError, match=f"header at offset {_payload_offset(recs, 3) - 12}$"):
+        record_offsets(bytes(data), verify=True)
+    # the stored payload CRC itself is checked, not only the payload
+    data = _stream(recs)
+    data[-1] ^= 0x80
+    with pytest.raises(ValueError, match=f"payload at offset {_payload_offset(recs, 4)}$"):
+        record_offsets(bytes(data), verify=True)
+
+
+def test_record_offsets_verify_checks_a_length_that_runs_past_the_end():
+    recs = _payloads([10, 20], seed=2)
+    data = _stream(recs)
+    data[_payload_offset(recs, 1) - 12 + 5] ^= 0x01  # length field: huge
+    with pytest.raises(ValueError, match="declares"):
+        record_offsets(bytes(data))
+    # its header CRC no longer matches, and the header is checked first
+    with pytest.raises(ValueError, match=f"header at offset {_payload_offset(recs, 1) - 12}$"):
+        record_offsets(bytes(data), verify=True)
+    truncated = bytes(_stream(recs))[:-3]
+    with pytest.raises(ValueError, match="declares"):
+        record_offsets(truncated, verify=True)
+
+
+def _payload_flipped(recs):
+    """A raw stream whose record 1 has one payload bit flipped; every
+    length field stays valid, so only the CRC can tell."""
+    data = _stream(recs)
+    data[_payload_offset(recs, 1) + 1] ^= 0x04
+    return bytes(data)
+
+
+@pytest.mark.parametrize(
+    "codec, compress",
+    [
+        (None, lambda raw: raw),
+        ("gzip", lambda raw: gzip.compress(raw, mtime=0)),
+        ("zlib", zlib.compress),
+    ],
+)
+def test_read_shard_rejects_a_payload_bit_flip(tmp_path, codec, compress):
+    recs = _payloads([40, 300, 8], seed=4)
+    blob = compress(_payload_flipped(recs))
+    suffix = {"gzip": ".tfrecord.gz", "zlib": ".tfrecord.zlib"}.get(codec, ".tfrecord")
+    path = tmp_path / f"train-00000-of-00001{suffix}"
+    path.write_bytes(blob)
+    for source in (blob, str(path)):
+        with pytest.raises(ValueError, match="corrupt TFRecord payload"):
+            read_shard(source, codec)
+    data, starts, lengths = read_shard(blob, codec, verify=False)
+    assert lengths.tolist() == [len(r) for r in recs]
+    assert data[starts[1] : starts[1] + lengths[1]] != recs[1]
+
+
+@pytest.mark.parametrize("compression", [None, "gzip", "zlib"])
+def test_load_rejects_a_payload_bit_flip(spark, tmp_path, compression):
+    import glob
+    import os
+    from collections import OrderedDict
+
+    import tensorflow_recorder_spark as trs
+    from tensorflow_recorder_spark import types as tt
+
+    schema = trs.Schema(
+        OrderedDict([("split", tt.SplitKey), ("x", tt.IntegerInput), ("label", tt.StringLabel)])
+    )
+    df = spark.createDataFrame(
+        [("TRAIN", i, "a") for i in range(30)], "split string, x long, label string"
+    )
+    job_dir = trs.convert(
+        df, output_dir=str(tmp_path), schema=schema, spark=spark,
+        compression=compression, num_shards=1,
+    )["tfrecord_dir"]
+    (path,) = glob.glob(os.path.join(job_dir, "train-*"))
+    data, starts, _ = read_shard(path, compression)
+    corrupt = bytearray(data)
+    corrupt[int(starts[7]) + 3] ^= 0x01
+    blob = {"gzip": lambda raw: gzip.compress(raw, mtime=0), "zlib": zlib.compress}.get(
+        compression, lambda raw: raw
+    )(bytes(corrupt))
+    with open(path, "wb") as fh:
+        fh.write(blob)
+    with pytest.raises(Exception, match="corrupt TFRecord payload"):
+        trs.load(job_dir, spark=spark)["TRAIN"].toPandas()
