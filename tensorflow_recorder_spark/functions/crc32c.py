@@ -85,17 +85,26 @@ def masked_crc32c(data: bytes) -> int:
 # number of numpy calls set by CHUNK and by the log of the longest
 # record (at most 2*CHUNK-1 column passes, one advance per distance
 # bit): no sort, no padded (rows x maxlen) matrix, no loop over
-# records or over their bytes. Records
-# are processed in blocks of about _BLOCK_BYTES so the buffer region a
-# block's column passes re-read stays in cache (1 MiB measured best
-# among 256 KiB .. 4 MiB) and the index arrays stay small.
+# records or over their bytes. Records are processed in blocks of about
+# _BLOCK_BYTES so the buffer region a block's column passes re-read
+# stays in cache and the index arrays stay small.
 #
-# CHUNK = 256 from a single-core microbenchmark of this kernel (random
-# bytes, median of 15 interleaved runs) at CHUNK 32/64/128/256:
-# 108 records x 65.6 KB 0.069/0.050/0.039/0.036 s, 60,000 records x
-# 170-200 B 0.080/0.067/0.066/0.060 s, 4,096 of those 0.006/0.004/
-# 0.005/0.004 s. A longer chunk means fewer chunks to advance; its
-# (CHUNK, 256) table is 256 KiB.
+# Both constants come from single-core microbenchmarks of this kernel
+# (random bytes, median of 15 interleaved runs, seconds):
+#
+#   CHUNK (block 1 MiB)          32      64      128     256
+#   108 records x 65.6 KB        0.069   0.050   0.039   0.036
+#   60,000 records x 170-200 B   0.080   0.067   0.066   0.060
+#   4,096 records x 170-200 B    0.006   0.004   0.005   0.004
+#
+#   _BLOCK_BYTES (CHUNK 256)     256K    512K    1M      2M      4M
+#   108 records x 65.6 KB        0.068   0.050   0.040   0.035   0.048
+#   60,000 records x 170-200 B   0.114   0.091   0.078   0.079   0.104
+#
+# (the block sweep repeated on another core gave the same order). A
+# longer chunk means fewer chunks to advance; its (CHUNK, 256) table is
+# 256 KiB. 1 MiB ties 2 MiB on short records and is ~12% slower on long
+# ones, a few ms per shard; 4 MiB is slower on both.
 
 CHUNK = 256
 _BLOCK_BYTES = 1 << 20
@@ -219,17 +228,6 @@ def crc32c_many(records: list[bytes], block_bytes: int = _BLOCK_BYTES) -> np.nda
     return crc32c_spans(b"".join(records), starts, lengths, block_bytes)
 
 
-def crc32c_fixed(arr: np.ndarray) -> np.ndarray:
-    """CRC-32C over the rows of an already-packed (n, w) uint8 array —
-    the fixed-width case of :func:`crc32c_spans` (the 8-byte TFRecord
-    length headers: one row per record, no per-record slicing)."""
-    arr = np.ascontiguousarray(arr, dtype=np.uint8)
-    n, width = arr.shape
-    return crc32c_spans(
-        arr.reshape(-1), np.arange(n, dtype=np.int64) * width, np.full(n, width)
-    )
-
-
 def _mask_np(crc: np.ndarray) -> np.ndarray:
     return ((crc >> np.uint32(15)) | (crc << np.uint32(17))) + np.uint32(_MASK_DELTA)
 
@@ -241,6 +239,3 @@ def masked_crc32c_spans(buf, starts, lengths) -> np.ndarray:
 def masked_crc32c_many(records: list[bytes]) -> np.ndarray:
     return _mask_np(crc32c_many(records))
 
-
-def masked_crc32c_fixed(arr: np.ndarray) -> np.ndarray:
-    return _mask_np(crc32c_fixed(arr))

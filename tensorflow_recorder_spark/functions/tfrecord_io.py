@@ -28,7 +28,7 @@ import pyarrow as pa
 from numpy.lib.stride_tricks import sliding_window_view
 
 from . import fs
-from .crc32c import masked_crc32c, masked_crc32c_fixed, masked_crc32c_spans
+from .crc32c import masked_crc32c, masked_crc32c_spans
 
 _U64 = struct.Struct("<Q")
 _U32 = struct.Struct("<I")
@@ -112,8 +112,8 @@ def frame_records(records) -> bytes:
     encoder's output column, possibly a slice — or a ``list[bytes]``,
     which becomes one Arrow array on entry. Payloads and both masked
     CRC-32Cs are read straight from the array's data buffer and offsets
-    (crc32c.masked_crc32c_spans for payloads, the (n, 8) header matrix
-    for lengths), and the stream is assembled in one buffer: one
+    (crc32c.masked_crc32c_spans, over the payloads and over the 8-byte
+    length fields of the frame matrix), and the stream is assembled in one buffer: one
     ``fh.write`` per batch, no per-record bytes objects."""
     data, starts, lengths = _binary_spans(records)
     n = len(lengths)
@@ -123,7 +123,9 @@ def frame_records(records) -> bytes:
     # u32 payload CRC; they sit around the payloads as 12 + 4
     frame = np.empty((n, 4), dtype="<u4")
     frame[:, :2].view("<u8")[:, 0] = lengths
-    frame[:, 2] = masked_crc32c_fixed(frame[:, :2].view(np.uint8))
+    frame[:, 2] = masked_crc32c_spans(
+        frame.view(np.uint8).reshape(-1), 16 * np.arange(n), np.full(n, 8)
+    )
     frame[:, 3] = masked_crc32c_spans(data, starts, lengths)
     out = np.empty(int(lengths.sum()) + 16 * n, dtype=np.uint8)
     is_payload = np.repeat(
@@ -142,9 +144,8 @@ def record_offsets(data, verify: bool = False) -> tuple[np.ndarray, np.ndarray]:
     pass: -> (starts, lengths), int64 arrays locating each record's
     payload in ``data``.
 
-    ``verify=True`` then checks every header CRC (crc32c_fixed over the
-    (n, 8) length fields) and every payload CRC (crc32c_spans over
-    ``(starts, lengths)``) in one batch, and raises for the first bad
+    ``verify=True`` then checks every header CRC (the 8-byte length
+    fields) and every payload CRC with crc32c_spans in one batch, and raises for the first bad
     record in stream order, header before payload, as TF's reader does.
 
     Corrupt input raises ONLY the declared ValueError (r11): a record
@@ -195,8 +196,8 @@ def _stored_crc(buf: np.ndarray, at: np.ndarray) -> np.ndarray:
 def _verify(buf: np.ndarray, starts: np.ndarray, lengths: np.ndarray) -> None:
     """Batch CRC check of unframed records; a length of -1 marks a
     record whose payload runs past the stream (header check only)."""
-    bad_header = masked_crc32c_fixed(
-        sliding_window_view(buf, 8)[starts - 12]
+    bad_header = masked_crc32c_spans(
+        buf, starts - 12, np.full(len(starts), 8)
     ) != _stored_crc(buf, starts - 4)
     whole = lengths >= 0
     bad_payload = np.zeros(len(starts), dtype=bool)
@@ -286,9 +287,7 @@ def _maybe_decompress_blob(blob: bytes, compressed) -> bytes:
     return blob
 
 
-def read_shard(
-    path_or_bytes, compressed=None, verify: bool = True
-) -> tuple[bytes, np.ndarray, np.ndarray]:
+def read_shard(path_or_bytes, compressed=None) -> tuple[bytes, np.ndarray, np.ndarray]:
     """Decompress and unframe one whole shard from a file path or an
     in-memory blob -> (data, starts, lengths), where record ``i`` is
     ``data[starts[i] : starts[i] + lengths[i]]`` (see
@@ -298,8 +297,8 @@ def read_shard(
     magic bytes (blobs) — the reference infers from extension
     (dataset_loader.py:72-79). Accepts bool or 'gzip'/'zlib'.
 
-    Both CRCs of every record are checked by default (``verify``, see
-    :func:`record_offsets`), so a flipped payload bit that keeps the
+    Both CRCs of every record are checked (``record_offsets(verify=True)``),
+    so a flipped payload bit that keeps the
     length valid raises instead of decoding to wrong values.
 
     Corrupt input raises ONLY the declared ValueError (r11): a
@@ -314,7 +313,7 @@ def read_shard(
                 data = fh.read()
     except (gzip.BadGzipFile, zlib.error, EOFError) as exc:
         raise ValueError(f"corrupt TFRecord stream: {exc!r}") from exc
-    return (data, *record_offsets(data, verify))
+    return (data, *record_offsets(data, verify=True))
 
 
 def read_file_records(path_or_bytes, compressed=None) -> Iterator[bytes]:
