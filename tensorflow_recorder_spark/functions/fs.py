@@ -206,6 +206,49 @@ def listdir(path: str) -> list[str]:
     return [status.getPath().getName() for status in fs.listStatus(jpath)]
 
 
+def list_dirs(path: str) -> list[str]:
+    """Sorted names of the directories directly under ``path``
+    (missing -> [])."""
+    if is_local(path):
+        local = to_local(path)
+        if not os.path.isdir(local):
+            return []
+        with os.scandir(local) as entries:
+            return sorted(e.name for e in entries if e.is_dir())
+    fs, jpath, _ = _hadoop(path)
+    if not fs.exists(jpath):
+        return []
+    return sorted(
+        status.getPath().getName()
+        for status in fs.listStatus(jpath)
+        if status.isDirectory()
+    )
+
+
+def qualify(path: str) -> str:
+    """Absolute, scheme-qualified ``path``, spelled as Spark's file
+    listing spells the paths under it: ``file:/abs/path`` for a local
+    path (a relative one resolves against this process's working
+    directory, not the JVM's), Hadoop's ``makeQualified`` otherwise."""
+    if is_local(path):
+        return "file:" + os.path.abspath(to_local(path))
+    fs, jpath, _ = _hadoop(path)
+    return str(fs.makeQualified(jpath).toString())
+
+
+# Spark globs every path handed to a file reader that contains one of
+# these (DataSource.checkAndGlobPathIfNecessary); Hadoop's glob takes a
+# backslash to mean "the next character is literal".
+_GLOB_META_RE = re.compile(r"([\\{}\[\]*?])")
+
+
+def glob_escape(path: str) -> str:
+    """``path`` with Hadoop glob metacharacters backslash-escaped, for a
+    Spark reader to take literally: unescaped, ``out[1]`` is a pattern
+    that matches ``out1`` and not itself."""
+    return _GLOB_META_RE.sub(r"\\\1", path)
+
+
 def remove_tree(path: str) -> None:
     """Recursive delete (directory trees; missing path is a no-op)."""
     if is_local(path):

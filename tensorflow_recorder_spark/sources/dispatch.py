@@ -5,9 +5,11 @@ accepts a pandas DataFrame, a ``*.csv`` path, or an image directory and
 normalizes all three into one tabular collection. The Spark-first version
 returns a *Spark* DataFrame and never materializes files on the driver:
 CSV paths go straight to ``spark.read.csv`` (distributed scan with
-pushdown) and directories to the distributed file scan in
-``image_dir.py``. A pandas DataFrame is the one intentionally
-driver-resident case (S1) and is ingested via the Arrow fast path.
+pushdown) and directories to one recursive ``binaryFile`` scan in
+``image_dir.py`` (the driver lists only the split and label directory
+levels; Spark's file source lists the files). A pandas DataFrame is the
+one intentionally driver-resident case (S1) and is ingested via the
+Arrow fast path.
 """
 
 from __future__ import annotations

@@ -45,7 +45,11 @@ def read_tfrecords(
             for i in range(len(content)):
                 yield decode(*read_shard(content[i].as_py()))
 
-    files = spark.read.format("binaryFile").load(paths).select("content")
+    files = (
+        spark.read.format("binaryFile")
+        .load([fs.glob_escape(path) for path in paths])
+        .select("content")
+    )
     return files.mapInArrow(parse, schema=struct)
 
 
@@ -55,12 +59,14 @@ def split_files(job_dir: str, split: str) -> list[str]:
     writer publishes, never a temp or partial file beside them.
 
     ``file:``/``file://`` URIs are globbed on their local form — glob on
-    the raw URI string would silently match nothing."""
+    the raw URI string would silently match nothing — and the directory
+    is escaped, so a name like ``out[1]`` is not read as a pattern."""
     if fs.is_local(job_dir):
         job_dir = fs.to_local(job_dir)
+    pattern = os.path.join(globlib.escape(job_dir), f"{split.lower()}-*")
     return sorted(
         path
-        for path in globlib.glob(os.path.join(job_dir, f"{split.lower()}-*"))
+        for path in globlib.glob(pattern)
         if path.endswith((TFRECORD_SUFFIX, GZIP_SUFFIX, ZLIB_SUFFIX))
     )
 

@@ -208,3 +208,50 @@ def test_convert_from_jsonl(spark, tmp_path):
     assert result["metrics"]["rows"] == 3
     splits = trs.load(result["tfrecord_dir"], spark=spark)
     assert splits["TRAIN"].count() == 2 and splits["TEST"].count() == 1
+
+
+def _png_tree(base: Path, rel_paths: list[str]) -> None:
+    from tensorflow_recorder_spark.functions.png_codec import encode_png
+
+    for i, rel in enumerate(rel_paths):
+        path = base / rel
+        path.parent.mkdir(parents=True, exist_ok=True)
+        path.write_bytes(encode_png(bytes([40 * i % 256]) * 12, 2, 2, "RGB"))
+
+
+def test_image_directory_keeps_hidden_label_dirs(spark, tmp_path):
+    """A ``_``-prefixed label directory is a label like any other (the
+    reference walk keeps it); a file at the directory root is not a row."""
+    base = tmp_path / "imgs"
+    _png_tree(
+        base,
+        [
+            "TRAIN/_background/a.png",
+            "TRAIN/_background/b.png",
+            "TRAIN/cat/c.png",
+            "TEST/_background/d.png",
+            "TEST/cat/e.png",
+        ],
+    )
+    (base / "README.txt").write_text("not an image\n")
+    result = trs.convert(str(base), output_dir=str(tmp_path / "out"), spark=spark)
+    assert result["metrics"] == {"rows": 5, "good_images": 5, "bad_images": 0}
+    job_dir = result["tfrecord_dir"]
+    assert read_vocabulary_asset(job_dir, "label") == ["_background", "cat"]
+    splits = trs.load(job_dir, spark=spark)
+    rows = {
+        split: sorted((r["image_name"], r["label"]) for r in df.collect())
+        for split, df in splits.items()
+    }
+    assert rows["TRAIN"] == [("a.png", 0), ("b.png", 0), ("c.png", 1)]
+    assert rows["TEST"] == [("d.png", 0), ("e.png", 1)]
+
+
+def test_glob_characters_in_image_and_output_dirs_round_trip(spark, tmp_path):
+    base = tmp_path / "imgs[1]{a,b}"
+    _png_tree(base, ["TRAIN/cat/a.png", "TRAIN/dog/b.png", "TEST/cat/c.png"])
+    result = trs.convert(str(base), output_dir=str(tmp_path / "out[1]"), spark=spark)
+    assert result["metrics"] == {"rows": 3, "good_images": 3, "bad_images": 0}
+    splits = trs.load(result["tfrecord_dir"], spark=spark)
+    counts = {split: df.count() for split, df in splits.items()}
+    assert counts["TRAIN"] == 2 and counts["TEST"] == 1

@@ -46,6 +46,24 @@ def test_join_preserves_scheme():
     assert fs.join("gs://bucket/pre/", "x") == "gs://bucket/pre/x"
 
 
+def test_list_dirs_and_qualify(tmp_path, monkeypatch):
+    (tmp_path / "b").mkdir()
+    (tmp_path / "a").mkdir()
+    (tmp_path / "f.txt").write_text("x")
+    assert fs.list_dirs(str(tmp_path)) == ["a", "b"]
+    assert fs.list_dirs(f"file://{tmp_path}") == ["a", "b"]
+    assert fs.list_dirs(str(tmp_path / "missing")) == []
+    assert fs.qualify(f"file://{tmp_path}/a") == f"file:{tmp_path}/a"
+    monkeypatch.chdir(tmp_path)
+    assert fs.qualify("a/") == f"file:{tmp_path}/a"
+
+
+def test_glob_escape():
+    assert fs.glob_escape("/data/out") == "/data/out"
+    assert fs.glob_escape("/d/imgs[1]{a,b}") == r"/d/imgs\[1\]\{a,b\}"
+    assert fs.glob_escape(r"/d/*?\x") == r"/d/\*\?\\x"
+
+
 def test_file_uri_round_trip(tmp_path):
     uri = f"file://{tmp_path}/sub/out.bin"
     fs.makedirs(f"file://{tmp_path}/sub")

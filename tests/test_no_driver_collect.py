@@ -30,7 +30,6 @@ ALLOWED = {
     "sinks/artifacts.py": (1, "fitted vocabulary (bounded by top_k)"),
     "operators/split.py": (1, "split histogram (<= #splits rows)"),
     "operators/scale.py": (1, "single row of fitted mean/std aggregates"),
-    "sources/image_dir.py": (1, "distinct split names (<= 4)"),
     "operators/bpe.py": (
         1,
         "merge-loop argmax: limit(1).collect() — exactly one (left, "

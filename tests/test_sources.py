@@ -75,6 +75,119 @@ def test_image_directory_scan(spark, tmp_path):
     }
 
 
+def _touch_tree(base, rel_paths):
+    for rel in rel_paths:
+        path = base / rel
+        path.parent.mkdir(parents=True, exist_ok=True)
+        path.write_bytes(b"fake")
+
+
+def _rows(df, base):
+    """Sorted (split, label, path under ``base``) rows: a file listed
+    under two roots shows up twice."""
+    prefix = len(str(base)) + 1
+    return sorted((r["split"], r["label"], r["image_uri"][prefix:]) for r in df.collect())
+
+
+def test_image_directory_edge_tree_matches_the_glob_listing(spark, tmp_path):
+    """Expected rows are what a ``<dir>/*/*/*`` binaryFile glob lists."""
+    base = tmp_path / "imgs"
+    _touch_tree(
+        base,
+        [
+            "TRAIN/cat/a.png",
+            "TRAIN/cat/_skip.png",  # hidden file names are not rows
+            "TRAIN/cat/.skip.png",
+            "TRAIN/dog/b.png",
+            "_SPLIT/cat/c.png",  # hidden split and label dirs are kept
+            "_SPLIT/_lbl/m.png",
+            ".hid/cat/d.png",
+            "TRAIN/.ipynb_checkpoints/e.png",
+            "TEST/_lbl/f.png",
+            "x._COPYING_/cat/j.png",
+            "_a=b/cat/h.png",  # hidden-looking names Spark lists anyway:
+            # each is also an extra root, and must not yield a row twice
+            "_metadata/cat/i.png",
+            "TRAIN/cat/deeper/z.png",  # four levels: grandparent/parent
+            "TRAIN/cat/deeper/more/w.png",  # five levels: not a row
+            "TRAIN/top.png",  # one and two levels: not rows
+            "README.txt",
+            "k=v/cat/g.png",  # no partition column
+        ],
+    )
+    df = read_image_directory(spark, str(base))
+    assert df.columns == ["split", "image_uri", "label"]
+    assert _rows(df, base) == sorted([
+        ("TRAIN", "cat", "TRAIN/cat/a.png"),
+        ("TRAIN", "dog", "TRAIN/dog/b.png"),
+        ("_SPLIT", "cat", "_SPLIT/cat/c.png"),
+        ("_SPLIT", "_lbl", "_SPLIT/_lbl/m.png"),
+        (".hid", "cat", ".hid/cat/d.png"),
+        ("TRAIN", ".ipynb_checkpoints", "TRAIN/.ipynb_checkpoints/e.png"),
+        ("TEST", "_lbl", "TEST/_lbl/f.png"),
+        ("x._COPYING_", "cat", "x._COPYING_/cat/j.png"),
+        ("_a=b", "cat", "_a=b/cat/h.png"),
+        ("_metadata", "cat", "_metadata/cat/i.png"),
+        ("cat", "deeper", "TRAIN/cat/deeper/z.png"),
+        ("k=v", "cat", "k=v/cat/g.png"),
+    ])
+    # image_uri is a plain local path
+    assert all(r["image_uri"].startswith(str(base)) for r in df.collect())
+
+
+def test_image_directory_relative_and_file_uri_bases_agree(spark, tmp_path, monkeypatch):
+    base = tmp_path / "imgs"
+    _touch_tree(base, ["TRAIN/cat/a.png", "TEST/dog/b.png", "_X/cat/c.png"])
+    expected = [
+        ("TEST", "dog", "TEST/dog/b.png"),
+        ("TRAIN", "cat", "TRAIN/cat/a.png"),
+        ("_X", "cat", "_X/cat/c.png"),
+    ]
+    assert _rows(read_image_directory(spark, f"file://{base}"), base) == expected
+    # relative to this process's working directory, not the JVM's
+    monkeypatch.chdir(tmp_path)
+    assert _rows(read_image_directory(spark, "imgs/"), base) == expected
+
+
+def test_image_directory_with_glob_characters_in_its_path(spark, tmp_path):
+    base = tmp_path / "imgs[1]{a,b}"
+    _touch_tree(base, ["TRAIN/cat/a.png", "_T/cat/b.png"])
+    assert _rows(read_image_directory(spark, str(base)), base) == [
+        ("TRAIN", "cat", "TRAIN/cat/a.png"),
+        ("_T", "cat", "_T/cat/b.png"),
+    ]
+
+
+def test_image_directory_listing_starts_no_spark_job(spark, tmp_path):
+    # more files than parallelPartitionDiscovery.threshold (32): listed
+    # as one root path each, they would be listed again by a Spark job
+    base = tmp_path / "imgs"
+    _touch_tree(
+        base,
+        [f"{split}/{label}/{i}.png" for split in ("TRAIN", "TEST", "_X")
+         for label in ("cat", "dog") for i in range(7)],
+    )
+    sc = spark.sparkContext
+    group = "test_sources.image_directory_listing"
+    sc.setJobGroup(group, "read_image_directory")
+    try:
+        df = read_image_directory(spark, str(base))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert df.count() == 42
+
+
+def test_image_directory_warns_on_unknown_split(spark, tmp_path, caplog):
+    base = tmp_path / "imgs"
+    _touch_tree(base, ["TRAIN/cat/a.png", "FOO/cat/b.png"])
+    with caplog.at_level("WARNING", logger="tensorflow_recorder_spark.sources.image_dir"):
+        read_image_directory(spark, str(base))
+    warnings = [r.getMessage() for r in caplog.records if r.levelname == "WARNING"]
+    assert len(warnings) == 1 and "FOO" in warnings[0] and "TRAIN" not in warnings[0]
+
 def test_to_dataframe_jsonl(spark, tmp_path):
     from tensorflow_recorder_spark.sources.dispatch import to_dataframe
 
