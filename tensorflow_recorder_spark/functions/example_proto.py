@@ -20,23 +20,29 @@ Encoding detail that matters for byte-level golden tests: protobuf map
 serialization order is not canonical; this encoder emits map entries in
 sorted-key order so output is deterministic.
 
-The convert path encodes with :func:`build_batch_encoder` and the load
-path decodes whole shards with :func:`build_batch_decoder`. The
+One encoder, :func:`encode_batch`, writes every record of the convert
+path: Arrow columns in, one Arrow binary array of Examples out. The
+load path decodes whole shards with :func:`build_batch_decoder`. The
 per-record :func:`encode_example` and :func:`decode_example` are their
-references, and ``decode_example`` + ``_scalar`` is also the batch
-decoder's fallback for records outside the encoder's layout.
+references (the tests compare against them), and ``decode_example`` +
+``_scalar`` is also the batch decoder's fallback for records outside
+the encoder's layout.
 """
 
 from __future__ import annotations
 
 import struct
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import types as T
 
 # ---------------------------------------------------------------- varint
 
 
-def _write_varint(buf: bytearray, value: int) -> None:
+def _varint(value: int) -> bytes:
+    buf = bytearray()
     while True:
         b = value & 0x7F
         value >>= 7
@@ -44,7 +50,7 @@ def _write_varint(buf: bytearray, value: int) -> None:
             buf.append(b | 0x80)
         else:
             buf.append(b)
-            return
+            return bytes(buf)
 
 
 def _read_varint(data: bytes, pos: int) -> tuple[int, int]:
@@ -64,8 +70,8 @@ def _tag(field: int, wire: int) -> int:
 
 
 def _write_len_delimited(buf: bytearray, field: int, payload: bytes) -> None:
-    _write_varint(buf, _tag(field, 2))
-    _write_varint(buf, len(payload))
+    buf += _varint(_tag(field, 2))
+    buf += _varint(len(payload))
     buf += payload
 
 
@@ -90,7 +96,7 @@ def _encode_float_list(values: list[float]) -> bytes:
 def _encode_int64_list(values: list[int]) -> bytes:
     payload = bytearray()
     for v in values:
-        _write_varint(payload, v & 0xFFFFFFFFFFFFFFFF)  # two's complement
+        payload += _varint(v & 0xFFFFFFFFFFFFFFFF)  # two's complement
     buf = bytearray()
     _write_len_delimited(buf, 1, bytes(payload))
     return bytes(buf)
@@ -131,429 +137,225 @@ def encode_example(features: dict[str, tuple[str, list]]) -> bytes:
     return bytes(example)
 
 
-# ------------------------------------------- schema-compiled fast path
-
-
-def build_row_encoder(kinds: dict[str, str]):
-    """Compile a fast per-row Example encoder for a fixed column->kind map.
-
-    Produces the byte-identical output of :func:`encode_example` (property-
-    tested in tests/test_format_layer.py) but ~5x faster: map-entry key
-    bytes and feature tags are precomputed per column, no per-row dict or
-    key sort, and scalar fast paths avoid list wrapping. The returned
-    callable takes values in SORTED column-name order (matching
-    encode_example's canonical map order).
-
-    Column order contract: ``columns`` property lists the expected order.
-    """
-    pack = struct.pack  # module-level ref: cloudpickle-safe
-    metas: list[tuple[bytes, bytes, str]] = []
-    ordered = sorted(kinds)
-    for name in ordered:
-        kind = kinds[name]
-        key_b = name.encode("utf-8")
-        key_field = b"\x0a" + _varint(len(key_b)) + key_b  # map key (field 1)
-        kind_tag = {"bytes": b"\x0a", "float": b"\x12", "int64": b"\x1a"}[kind]
-        metas.append((key_field, kind_tag, kind))
-
-    def encode_row(values) -> bytes:
-        parts = []
-        for (key_field, kind_tag, kind), v in zip(metas, values):
-            # missing -> empty feature, matching encode_example(kind, [])
-            if v is None or (isinstance(v, float) and v != v):
-                inner = b"" if kind == "bytes" else b"\x0a\x00"
-            elif kind == "bytes":
-                if isinstance(v, str):
-                    b = v.encode("utf-8")
-                    inner = b"\x0a" + _varint(len(b)) + b
-                elif isinstance(v, (bytes, bytearray)):
-                    inner = b"\x0a" + _varint(len(v)) + bytes(v)
-                else:  # list of strings/bytes
-                    buf = bytearray()
-                    for item in v:
-                        b = item.encode("utf-8") if isinstance(item, str) else bytes(item)
-                        buf += b"\x0a" + _varint(len(b)) + b
-                    inner = bytes(buf)
-            elif kind == "int64":
-                if isinstance(v, (list, tuple)) or type(v).__name__ == "ndarray":
-                    payload = bytearray()
-                    for item in v:
-                        payload += _varint(int(item) & 0xFFFFFFFFFFFFFFFF)
-                else:
-                    payload = _varint(int(v) & 0xFFFFFFFFFFFFFFFF)
-                inner = b"\x0a" + _varint(len(payload)) + bytes(payload)
-            else:  # float
-                if isinstance(v, (list, tuple)) or type(v).__name__ == "ndarray":
-                    payload = struct.pack(f"<{len(v)}f", *[float(x) for x in v])
-                else:
-                    payload = pack("<f", float(v))
-                inner = b"\x0a" + _varint(len(payload)) + payload
-            feature = kind_tag + _varint(len(inner)) + inner
-            entry = key_field + b"\x12" + _varint(len(feature)) + feature
-            parts.append(b"\x0a" + _varint(len(entry)) + entry)
-        feats = b"".join(parts)
-        return b"\x0a" + _varint(len(feats)) + feats
-
-    encode_row.columns = ordered  # type: ignore[attr-defined]
-    return encode_row
-
-
-def _varint(value: int) -> bytes:
-    if value < 0x80:
-        return bytes((value,))
-    buf = bytearray()
-    while True:
-        b = value & 0x7F
-        value >>= 7
-        if value:
-            buf.append(b | 0x80)
-        else:
-            buf.append(b)
-            return bytes(buf)
-
-
-# Varints of 0..16383 precomputed (1-2 bytes each): record/field lengths
-# and most int64 payloads hit this table instead of the loop.
-_VT = tuple(_varint(i) for i in range(1 << 14))
-
-
-# --------------------------------------------- r12 vectorized column paths
+# ------------------------------------------------------ columnar encoding
 #
-# The batch encoder's per-VALUE Python work (pack/varint/append per cell)
-# measured 2.9-3.2 s single-core per 600k lineitem rows — fully
-# task-parallel but the single biggest CPU sink of the convert encode
-# stage (r11 "Not yet optimized"; r12 verdict item 6). Each fast path
-# below encodes a whole column with numpy/Arrow: values are grouped by
-# their wire WIDTH (varint byte count / payload length), each group's
-# entries are assembled as one (rows x width) uint8 matrix — constant
-# prefix broadcast + vectorized payload bytes — and per-row bytes
-# objects are C-level slices of the matrix's single buffer. Any input
-# a path cannot prove safe (sub-lists, mixed str/bytes, non-integral
-# floats for int64, exotic objects) returns None and the caller runs
-# the original per-value loop, so semantics are EXACTLY the loop's
-# (property-tested byte-identity).
+# encode_batch writes all records of a batch at once. In a record, each
+# column (sorted by name) is one map entry, a HEADER then a BODY:
+#
+#   0x0a V(entry) 0x0a V(len key) key 0x12 V(feature) tag V(list) [0x0a V(n)]
+#
+# V(x) is the varint of x. The bracketed field is the packed payload's
+# (float, int64), or in a scalar bytes column the one value's (absent
+# for a null). The body is that value, the packed payload, or a bytes
+# list's framed values. A scalar is a list of one value, or of none for
+# a null or a scalar NaN. Headers differ between rows only in their
+# varints' widths; bodies are Arrow arrays (a string column is used as
+# it is), and one binary_join_element_wise concatenates the record
+# header and every column's header and body.
+
+_TAGS = {"bytes": b"\x0a", "float": b"\x12", "int64": b"\x1a"}
+_MAX_BINARY = 2**31 - 1  # bytes in one Arrow binary array (int32 offsets)
+# a varint takes one byte plus one per step its value reaches
+_VARINT_STEPS = [np.uint64(1 << (7 * k)) for k in range(1, 10)]
 
 
-def _pylist(values):
-    """Arrow array -> python list (nulls -> None) for the exact
-    per-value fallback loops; pass-through for plain sequences."""
-    try:
-        import pyarrow as pa
-
-        if isinstance(values, (pa.Array, pa.ChunkedArray)):
-            return values.to_pylist()
-    except ImportError:
-        pass
-    return values
-
-
-def _slice_rows(mat) -> list[bytes]:
-    """Per-row bytes of a 2-D uint8 matrix via one tobytes + C slices."""
-    n, w = mat.shape
-    big = mat.tobytes()
-    return [big[i : i + w] for i in range(0, n * w, w)]
+def _varint_width(v):
+    """Byte count of the varint of each value (uint64, or int64 >= 0)."""
+    v = v.astype(np.uint64, copy=False)
+    width = np.ones(v.shape, dtype=np.int64)
+    top = v.max() if v.size else 0
+    for step in _VARINT_STEPS:
+        if step > top:
+            break
+        width += v >= step
+    return width
 
 
-def _as_pa(values, pa_type):
-    """Coerce a column to ONE Arrow array of ``pa_type`` — zero/cheap
-    when the caller already holds Arrow data (the mapInArrow encode
-    path: no pandas or list round-trip), a single C conversion pass for
-    python sequences, None when the column cannot be safely coerced
-    (the caller then runs the exact per-value loop)."""
-    import pyarrow as pa
-
-    try:
-        if isinstance(values, pa.ChunkedArray):
-            values = values.combine_chunks()
-        if isinstance(values, pa.Array):
-            if values.type == pa_type:
-                return values
-            return values.cast(pa_type)
-        return pa.array(values, type=pa_type)
-    except (pa.ArrowInvalid, pa.ArrowTypeError, pa.ArrowNotImplementedError,
-            ValueError, TypeError, OverflowError):
-        return None
-
-
-def _pa_scalar_array(values, pa_type, np_dtype):
-    """values -> (numpy values view of the Arrow data buffer, null-mask
-    ndarray) or None when the column isn't scalar-coercible to
-    ``pa_type``. The raw buffer is used instead of ``to_numpy`` because
-    a nulled int64 column would otherwise round-trip through float64
-    and silently lose precision past 2^53."""
-    import numpy as np
-
-    a = _as_pa(values, pa_type)
-    if a is None:
-        return None
-    n = len(a)
-    if n == 0:
-        return np.zeros(0, dtype=np_dtype), np.zeros(0, dtype=bool)
-    if a.buffers()[1] is None:  # Arrow may omit an all-null data buffer
-        return None
-    vals = np.frombuffer(a.buffers()[1], dtype=np_dtype, count=n + a.offset)[
-        a.offset :
-    ]
-    if a.null_count:
-        nulls = ~a.is_valid().to_numpy(zero_copy_only=False)
-    else:
-        nulls = np.zeros(n, dtype=bool)
-    return vals, nulls
-
-
-def _float_scalar_entries(values, prefix, null_entry):
-    import numpy as np
-    import pyarrow as pa
-
-    got = _pa_scalar_array(values, pa.float64(), np.float64)
-    if got is None:
-        return None
-    vals, nulls = got
-    n = len(vals)
-    if n == 0:
-        return []
-    vals = np.where(nulls, 0.0, vals)
-    nulls = nulls | np.isnan(vals)
-    with np.errstate(over="ignore"):
-        f4 = vals.astype("<f4")
-    # a finite double that rounds to inf in float32: the loop's
-    # struct.pack raises OverflowError, so decline rather than write inf
-    if (np.isinf(f4) & np.isfinite(vals)).any():
-        return None
-    p = len(prefix)
-    mat = np.empty((n, p + 4), dtype=np.uint8)
-    mat[:, :p] = np.frombuffer(prefix, dtype=np.uint8)
-    mat[:, p:] = f4.view(np.uint8).reshape(n, 4)
-    entries = _slice_rows(mat)
-    if nulls.any():
-        for i in np.flatnonzero(nulls).tolist():
-            entries[i] = null_entry
-    return entries
-
-
-def _int64_scalar_entries(values, prefixes, null_entry):
-    import numpy as np
-    import pyarrow as pa
-
-    got = _pa_scalar_array(values, pa.int64(), np.int64)
-    if got is None:
-        return None
-    vals, nulls = got
-    n = len(vals)
-    if n == 0:
-        return []
-    v = np.where(nulls, 0, vals).astype(np.int64).view(np.uint64)
-    # varint byte count: 1 + (number of 7-bit boundaries crossed)
-    nb = np.ones(n, dtype=np.int64)
-    for k in range(1, 10):
-        nb += (v >= np.uint64(1 << (7 * k))).astype(np.int64)
-    entries: list = [None] * n
-    for length in np.unique(nb).tolist():
-        rows = np.flatnonzero(nb == length)
-        pref = prefixes[length]
-        p = len(pref)
-        mat = np.empty((len(rows), p + length), dtype=np.uint8)
-        mat[:, :p] = np.frombuffer(pref, dtype=np.uint8)
-        g = v[rows]
-        for k in range(length):
-            byte = ((g >> np.uint64(7 * k)) & np.uint64(0x7F)).astype(
-                np.uint8
-            )
-            if k < length - 1:
-                byte |= np.uint8(0x80)
-            mat[:, p + k] = byte
-        chunk = _slice_rows(mat)
-        for j, r in enumerate(rows.tolist()):
-            entries[r] = chunk[j]
-    if nulls.any():
-        for i in np.flatnonzero(nulls).tolist():
-            entries[i] = null_entry
-    return entries
-
-
-def _bytes_scalar_entries(values, key_field, kind_tag, null_entry, wrap, vt):
-    import numpy as np
-    import pyarrow as pa
-
-    a = _as_pa(values, pa.large_string())
-    if a is None:
-        a = _as_pa(values, pa.large_binary())
-    if a is None:
-        return None
-    n = len(a)
-    if n == 0:
-        return []
-    bufs = a.buffers()
-    offsets = np.frombuffer(bufs[1], dtype=np.int64, count=n + 1 + a.offset)[
-        a.offset :
-    ]
-    data = (
-        np.frombuffer(bufs[2], dtype=np.uint8)
-        if bufs[2] is not None
-        else np.zeros(0, dtype=np.uint8)
+def _binary(data, lengths) -> pa.BinaryArray:
+    """Arrow binary array of consecutive ``lengths``-byte rows of ``data``."""
+    offsets = np.zeros(len(lengths) + 1, dtype=np.int64)
+    np.cumsum(lengths, out=offsets[1:])
+    if offsets[-1] > _MAX_BINARY:
+        raise ValueError(f"{offsets[-1]} encoded bytes exceed one Arrow binary array")
+    return pa.Array.from_buffers(
+        pa.binary(), len(lengths),
+        [None, pa.py_buffer(offsets.astype(np.int32)), pa.py_buffer(data)],
     )
-    lens = np.diff(offsets)
-    if a.null_count:
-        nulls = ~a.is_valid().to_numpy(zero_copy_only=False)
+
+
+def _pack(layout, n: int) -> pa.BinaryArray:
+    """``n`` rows, each ``layout``'s items back to back: bytes (the same
+    in every row) or int arrays (row i holds value i as a varint); an
+    item given as ``(item, present)`` is written only in the ``present``
+    rows. Each item fills a rows x max-width block of one uint8 matrix;
+    where some row's item is narrower (or absent), a mask over the
+    matrix keeps each row's bytes."""
+    mats, masks = [], []
+    lengths = np.zeros(n, dtype=np.int64)
+    for x, present in (x if isinstance(x, tuple) else (x, None) for x in layout):
+        if isinstance(x, bytes):
+            mat = np.broadcast_to(np.frombuffer(x, dtype=np.uint8), (n, len(x)))
+            mask, size = None, len(x)
+        else:
+            v = x.astype(np.uint64, copy=False)
+            size = _varint_width(v)
+            top = int(size.max()) if n else 1
+            shifts = np.arange(top)
+            mat = (v[:, None] >> (7 * shifts).astype(np.uint64)) & np.uint64(0x7F)
+            mat = mat.astype(np.uint8)
+            mat[shifts < (size - 1)[:, None]] |= 0x80
+            mask = None if (size == top).all() else shifts < size[:, None]
+        if present is not None:
+            keep = np.broadcast_to(present[:, None], mat.shape)
+            mask, size = keep if mask is None else mask & keep, size * present
+        mats.append(mat)
+        masks.append(mask)
+        lengths += size
+    # C order, so each row's bytes follow the previous row's
+    out = np.empty((n, sum(m.shape[1] for m in mats)), dtype=np.uint8)
+    mat = np.concatenate(mats, axis=1, out=out)
+    if all(k is None for k in masks):
+        return _binary(mat, lengths)
+    full = [np.broadcast_to(True, m.shape) if k is None else k for m, k in zip(mats, masks)]
+    return _binary(mat[np.concatenate(full, axis=1)], lengths)
+
+
+def _lengths(a: pa.Array):
+    """Byte length of each value of a binary array (0 for a null)."""
+    return pc.binary_length(a).fill_null(0).to_numpy().astype(np.int64)
+
+
+def _column(kind: str, a: pa.Array):
+    """One column's header layout after the list length, that layout's
+    width per row, its body array, and the body's length per row."""
+    t = a.type
+    is_list = pa.types.is_list(t) or pa.types.is_large_list(t)
+    if kind == "bytes" and not is_list:  # the value field goes in the header
+        body = a.cast(pa.binary())
+        present = body.is_valid().to_numpy(zero_copy_only=False)
+        lens = _lengths(body)
+        layout = [(b"\x0a", present), (lens, present)]
+        return layout, present * (1 + _varint_width(lens)), body, lens
+    if is_list:
+        flat, t = a.flatten(), t.value_type
+        if flat.null_count:
+            raise TypeError("null value inside a list feature")
+        counts = pc.list_value_length(a).fill_null(0).to_numpy()
     else:
-        nulls = np.zeros(n, dtype=bool)
-    valid_lens = lens[~nulls]
-    uniq = np.unique(valid_lens) if len(valid_lens) else np.zeros(0, np.int64)
-    # many distinct payload lengths (free-text columns): the per-group
-    # win evaporates — let the loop handle it
-    if len(uniq) > max(64, n // 64):
-        return None
-    entries: list = [None] * n
-    sel = ~nulls
-    for length in uniq.tolist():
-        rows = np.flatnonzero(sel & (lens == length))
-        pref = wrap(key_field, kind_tag, b"\x0a" + vt(length) + b"\x00" * length)
-        pref = pref[: len(pref) - length] if length else pref
-        p = len(pref)
-        mat = np.empty((len(rows), p + length), dtype=np.uint8)
-        mat[:, :p] = np.frombuffer(pref, dtype=np.uint8)
-        if length:
-            idx = offsets[rows][:, None] + np.arange(length, dtype=np.int64)
-            mat[:, p:] = data[idx]
-        chunk = _slice_rows(mat)
-        for j, r in enumerate(rows.tolist()):
-            entries[r] = chunk[j]
-    if nulls.any():
-        for i in np.flatnonzero(nulls).tolist():
-            entries[i] = null_entry
-    return entries
+        counts = a.is_valid().to_numpy(zero_copy_only=False)
+        if kind == "float" and pa.types.is_floating(t):  # a scalar NaN: none
+            nan = pc.is_nan(a).fill_null(False).to_numpy(zero_copy_only=False)
+            counts = counts & ~nan
+        flat = a.filter(pa.array(counts))
+    if kind == "bytes":
+        flat = flat.cast(pa.binary())
+        framing = _pack([b"\x0a", _lengths(flat)], len(flat))
+        items = pc.binary_join_element_wise(framing, flat, b"")
+    elif kind == "float":
+        if not (pa.types.is_floating(t) or pa.types.is_integer(t) or pa.types.is_null(t)):
+            raise TypeError(f"float feature from Arrow type {t}")
+        vals = flat.cast(pa.float64()).to_numpy()
+        with np.errstate(over="ignore"):
+            f4 = vals.astype("<f4")
+        if (np.isinf(f4) & np.isfinite(vals)).any():  # as struct.pack("<f")
+            raise OverflowError("float too large to pack with f format")
+        items = _binary(f4.tobytes(), np.full(len(f4), 4))
+    else:
+        if not (pa.types.is_integer(t) or pa.types.is_boolean(t) or pa.types.is_null(t)):
+            raise TypeError(f"int64 feature from Arrow type {t}")
+        signed = not pa.types.is_unsigned_integer(t)
+        vals = flat.cast(pa.int64() if signed else pa.uint64()).to_numpy()
+        items = _pack([vals.view(np.uint64)], len(flat))
+    offsets = np.zeros(len(a) + 1, dtype=np.int64)
+    np.cumsum(counts, out=offsets[1:])
+    rows = pa.ListArray.from_arrays(pa.array(offsets, pa.int32()), items)
+    body = pc.binary_join(rows, b"")
+    lens = _lengths(body)
+    if kind == "bytes":
+        return [], np.zeros(len(a), dtype=np.int64), body, lens
+    return [b"\x0a", lens], 1 + _varint_width(lens), body, lens
+
+
+def _arrow_column(kind: str, values) -> pa.Array:
+    """One column as one Arrow array. Arrow input is used as it is. A
+    Python sequence is converted: None and a float NaN become null, a str
+    its UTF-8 bytes, an int its value mod 2**64 (as encode_example
+    writes it), and a column holding any list becomes list-typed."""
+    if isinstance(values, pa.Array):
+        return values
+    typ = {"bytes": pa.binary(), "float": pa.float64(), "int64": pa.uint64()}[kind]
+
+    def item(v):
+        if kind == "bytes":
+            return v.encode("utf-8") if isinstance(v, str) else v
+        return int(v) & 0xFFFFFFFFFFFFFFFF if kind == "int64" else float(v)
+
+    def row(v, as_list):
+        if v is None or (isinstance(v, float) and v != v):
+            return None
+        if isinstance(v, (list, tuple, np.ndarray)):
+            return [item(x) for x in v]
+        return [item(v)] if as_list else item(v)
+
+    as_list = any(isinstance(v, (list, tuple, np.ndarray)) for v in values)
+    rows = [row(v, as_list) for v in values]
+    return pa.array(rows, type=pa.list_(typ) if as_list else typ)
+
+
+def encode_batch(kinds: dict[str, str], columns) -> pa.BinaryArray:
+    """Serialized Examples of a batch, one per row, as one Arrow binary
+    array (the convert hot path).
+
+    ``columns`` holds one column per feature in sorted-name order: an
+    Arrow array (string/binary, numeric or boolean, or a list of those)
+    or a Python sequence. Each record equals :func:`encode_example` of
+    its row: a null or a scalar NaN is an empty list, a scalar a
+    one-value list. Raises OverflowError for a float beyond float32,
+    TypeError for a null inside a list, and ValueError when the batch
+    exceeds one Arrow binary array (2 GiB).
+    """
+    names = sorted(kinds)
+    for kind in kinds.values():
+        if kind not in _TAGS:
+            raise ValueError(f"unknown feature kind {kind!r}")
+    if len(columns) != len(names):
+        raise ValueError(f"{len(columns)} columns for {len(names)} features")
+    arrays = [_arrow_column(kinds[c], v) for c, v in zip(names, columns)]
+    n = len(arrays[0]) if arrays else 0
+    if any(len(a) != n for a in arrays):
+        raise ValueError("columns differ in length")
+    parts = []
+    sizes = np.zeros(n, dtype=np.int64)
+    for name, a in zip(names, arrays):
+        kind = kinds[name]
+        layout, layout_len, body, body_len = _column(kind, a)
+        key = name.encode("utf-8")
+        key_field = b"\x0a" + _varint(len(key)) + key + b"\x12"
+        inner = layout_len + body_len
+        feature = 1 + _varint_width(inner) + inner
+        entry = len(key_field) + _varint_width(feature) + feature
+        header = [b"\x0a", entry, key_field, feature, _TAGS[kind], inner, *layout]
+        parts += [_pack(header, n), body]
+        sizes += 1 + _varint_width(entry) + entry
+    record = _pack([b"\x0a", sizes], n)
+    total = int((1 + _varint_width(sizes) + sizes).sum())
+    if total > _MAX_BINARY:
+        raise ValueError(f"{total} encoded bytes exceed one Arrow binary array")
+    return pc.binary_join_element_wise(
+        record, *parts, b"", null_handling="replace", null_replacement=""
+    )
 
 
 def build_batch_encoder(kinds: dict[str, str]):
-    """Compile a column-wise batch Example encoder for a fixed
-    column->kind map (the convert hot path).
+    """``encode_batch`` for a fixed column->kind map, returning the
+    records as a ``list[bytes]``; ``.columns`` is the expected column
+    order."""
 
-    Byte-identical to :func:`encode_example` (property-tested) but
-    encodes a whole Arrow batch column-at-a-time: for each column the
-    map-entry bytes around the payload are CONSTANT (feature/entry/map
-    lengths are fixed for fixed-width payloads), so scalar floats become
-    one precomputed prefix + 4 packed bytes and scalar int64s a
-    per-payload-length prefix + table varint — no per-value tag
-    arithmetic or kind dispatch. The returned callable takes one
-    sequence of values per column in SORTED column-name order and
-    returns the per-row serialized Examples.
-    """
-    pack = struct.pack
-    vt, varint = _VT, _varint
-    ordered = sorted(kinds)
+    def encode(columns) -> list[bytes]:
+        return encode_batch(kinds, columns).to_pylist()
 
-    def _vt(x: int) -> bytes:
-        return vt[x] if x < (1 << 14) else varint(x)
-
-    def _wrap(key_field: bytes, kind_tag: bytes, inner: bytes) -> bytes:
-        """Full Features.feature map entry for one already-encoded
-        FeatureList payload (mirrors encode_example's nesting)."""
-        feature = kind_tag + _vt(len(inner)) + inner
-        entry = key_field + b"\x12" + _vt(len(feature)) + feature
-        return b"\x0a" + _vt(len(entry)) + entry
-
-    col_encoders = []
-    for name in ordered:
-        kind = kinds[name]
-        key_b = name.encode("utf-8")
-        key_field = b"\x0a" + _vt(len(key_b)) + key_b
-        kind_tag = {"bytes": b"\x0a", "float": b"\x12", "int64": b"\x1a"}[kind]
-        # entry emitted for None/NaN: empty list payload
-        null_entry = _wrap(key_field, kind_tag, b"" if kind == "bytes" else b"\x0a\x00")
-
-        if kind == "float":
-            scalar_prefix = _wrap(key_field, kind_tag, b"\x0a\x04" + b"\x00" * 4)[:-4]
-
-            def enc_col_slow(values, *, _p=scalar_prefix, _n=null_entry,
-                             _k=key_field, _t=kind_tag) -> list[bytes]:
-                out = []
-                append = out.append
-                for v in values:
-                    if v is None or (isinstance(v, float) and v != v):
-                        append(_n)
-                    elif isinstance(v, (list, tuple)) or type(v).__name__ == "ndarray":
-                        payload = pack(f"<{len(v)}f", *[float(x) for x in v])
-                        append(_wrap(_k, _t, b"\x0a" + _vt(len(payload)) + payload))
-                    else:
-                        append(_p + pack("<f", float(v)))
-                return out
-
-            def enc_col(values, *, _p=scalar_prefix, _n=null_entry,
-                        _slow=enc_col_slow) -> list[bytes]:
-                fast = _float_scalar_entries(values, _p, _n)
-                return fast if fast is not None else _slow(_pylist(values))
-
-        elif kind == "int64":
-            # one constant prefix per varint payload length 1..10
-            prefixes = [b""] + [
-                _wrap(key_field, kind_tag, b"\x0a" + _vt(n) + b"\x00" * n)[:-n]
-                for n in range(1, 11)
-            ]
-
-            def enc_col_slow(values, *, _ps=prefixes, _n=null_entry,
-                             _k=key_field, _t=kind_tag) -> list[bytes]:
-                out = []
-                append = out.append
-                for v in values:
-                    if v is None or (isinstance(v, float) and v != v):
-                        append(_n)
-                    elif isinstance(v, (list, tuple)) or type(v).__name__ == "ndarray":
-                        payload = b"".join(
-                            _vt(int(x) & 0xFFFFFFFFFFFFFFFF) for x in v
-                        )
-                        append(_wrap(_k, _t, b"\x0a" + _vt(len(payload)) + payload))
-                    else:
-                        pv = _vt(int(v) & 0xFFFFFFFFFFFFFFFF)
-                        append(_ps[len(pv)] + pv)
-                return out
-
-            def enc_col(values, *, _ps=prefixes, _n=null_entry,
-                        _slow=enc_col_slow) -> list[bytes]:
-                fast = _int64_scalar_entries(values, _ps, _n)
-                return fast if fast is not None else _slow(_pylist(values))
-
-        else:  # bytes
-
-            def enc_col_slow(values, *, _n=null_entry, _k=key_field,
-                             _t=kind_tag) -> list[bytes]:
-                out = []
-                append = out.append
-                for v in values:
-                    if v is None or (isinstance(v, float) and v != v):
-                        append(_n)
-                    elif isinstance(v, str):
-                        b = v.encode("utf-8")
-                        append(_wrap(_k, _t, b"\x0a" + _vt(len(b)) + b))
-                    elif isinstance(v, (bytes, bytearray)):
-                        b = bytes(v)
-                        append(_wrap(_k, _t, b"\x0a" + _vt(len(b)) + b))
-                    else:  # list of strings/bytes
-                        buf = bytearray()
-                        for item in v:
-                            b = item.encode("utf-8") if isinstance(item, str) else bytes(item)
-                            buf += b"\x0a" + _vt(len(b)) + b
-                        append(_wrap(_k, _t, bytes(buf)))
-                return out
-
-            def enc_col(values, *, _n=null_entry, _k=key_field,
-                        _t=kind_tag, _slow=enc_col_slow) -> list[bytes]:
-                fast = _bytes_scalar_entries(values, _k, _t, _n, _wrap, _vt)
-                return fast if fast is not None else _slow(_pylist(values))
-
-        col_encoders.append(enc_col)
-
-    def encode_batch(columns) -> list[bytes]:
-        entry_cols = [enc(vals) for enc, vals in zip(col_encoders, columns)]
-        out = []
-        append = out.append
-        join = b"".join
-        for row_entries in zip(*entry_cols):
-            feats = join(row_entries)
-            append(b"\x0a" + _vt(len(feats)) + feats)
-        return out
-
-    encode_batch.columns = ordered  # type: ignore[attr-defined]
-    return encode_batch
+    encode.columns = sorted(kinds)  # type: ignore[attr-defined]
+    return encode
 
 
 # ------------------------------------------------------------- decoding
@@ -681,7 +483,7 @@ def _scalar(kind_values, target: T.DataType):
 
 # ------------------------------------------------ columnar batch decoding
 #
-# The mirror of build_batch_encoder for the load path. A record written
+# The mirror of encode_batch for the load path. A record written
 # by that encoder has, for every column in sorted-name order, the entry
 #
 #   0x0a len { 0x0a len key  0x12 len { kind_tag len { 0x0a len value } } }
@@ -704,8 +506,6 @@ def _read_varints(buf, pos):
     counts int64); the count is 0 where the varint does not fit 64 bits
     (the caller's checks then reject the record). Reads up to 10 bytes
     past each position."""
-    import numpy as np
-
     b = buf[pos]
     vals = (b & 0x7F).astype(np.uint64)
     nbytes = np.ones(len(pos), dtype=np.int64)
@@ -725,9 +525,6 @@ def _read_varints(buf, pos):
 def _bytes_column(data: bytes, starts, lengths, valid, utf8: bool):
     """Arrow string/binary array from per-row slices of ``data``: one
     join of the valid rows' bodies plus offsets (int64 past 2 GiB)."""
-    import numpy as np
-    import pyarrow as pa
-
     lengths = np.where(valid, lengths, 0)
     offsets = np.zeros(len(lengths) + 1, dtype=np.int64)
     np.cumsum(lengths, out=offsets[1:])
@@ -754,7 +551,7 @@ def _bytes_column(data: bytes, starts, lengths, valid, utf8: bool):
 
 def build_batch_decoder(struct):
     """Compile a column-wise batch Example decoder for a Spark StructType
-    (the load hot path; the mirror of :func:`build_batch_encoder`).
+    (the load hot path; the mirror of :func:`encode_batch`).
 
     The returned callable takes one decompressed shard ``data`` and its
     record ``starts``/``lengths`` (tfrecord_io.record_offsets) and returns
@@ -765,8 +562,6 @@ def build_batch_decoder(struct):
     and every record when a field has another type, goes through the
     reference. Corrupt input raises only ValueError.
     """
-    import numpy as np
-    import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_type
 
     fields = [(f.name, f.dataType) for f in struct.fields]

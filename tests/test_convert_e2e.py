@@ -255,3 +255,36 @@ def test_glob_characters_in_image_and_output_dirs_round_trip(spark, tmp_path):
     splits = trs.load(result["tfrecord_dir"], spark=spark)
     counts = {split: df.count() for split, df in splits.items()}
     assert counts["TRAIN"] == 2 and counts["TEST"] == 1
+
+
+def test_backslash_in_image_directory_names_round_trips(spark, tmp_path):
+    """Files under directories (and with names) holding a backslash are
+    rows like any other: none is dropped uncounted. A 4-deep file takes
+    (grandparent, parent) as (split, label), so ``b\\s`` is an unknown
+    split and routes to DISCARD."""
+    base = tmp_path / "imgs"
+    _png_tree(
+        base,
+        [
+            "TRAIN/cat/a.png",
+            "TRAIN/back\\slash/z.png",
+            "TRAIN/a/we\\ird.png",
+            "TRAIN/b\\s/c/w.png",
+            "VALIDATION/cat/v.png",
+            "TEST/cat/t.png",
+        ],
+    )
+    result = trs.convert(str(base), output_dir=str(tmp_path / "out"), spark=spark)
+    assert result["metrics"] == {"rows": 6, "good_images": 6, "bad_images": 0}
+    job_dir = result["tfrecord_dir"]
+    splits = trs.load(job_dir, spark=spark)
+    names = {split: sorted(r["image_name"] for r in df.collect()) for split, df in splits.items()}
+    assert names == {
+        "TRAIN": ["a.png", "we\\ird.png", "z.png"],
+        "VALIDATION": ["v.png"],
+        "TEST": ["t.png"],
+    }
+    discarded = "".join(
+        p.read_text() for p in (Path(job_dir) / "discarded-data").glob("part-*")
+    )
+    assert "w.png" in discarded
