@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, types as T
 
 from ..constants import DISCARD
 from ..functions.image_codec import encode_pixels, mode_to_channel
+from ..functions.worker import drops_zip_finders
 
 # An image loader returns (pixels, width, height, mode) for a path.
 ImageLoader = Callable[[str], tuple[bytes, int, int, str]]
@@ -149,6 +150,7 @@ def extract_images(
         ]
     )
 
+    @drops_zip_finders
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             names, images, heights, widths, channels, oks = [], [], [], [], [], []

@@ -41,6 +41,7 @@ from ..functions import fs
 from ..functions.example_proto import encode_batch
 from ..functions.partitioning import spread_to_parallelism
 from ..functions.tfrecord_io import frame_records, open_output
+from ..functions.worker import drops_zip_finders
 
 # records framed per write call: bounds the framed copy of a batch
 _FRAME_CHUNK = 4096
@@ -97,6 +98,7 @@ def encode_examples(df: DataFrame, split_key: str = "split") -> DataFrame:
     kinds = feature_kinds(df)
     columns = sorted(kinds)  # encode_batch's column order
 
+    @drops_zip_finders
     def encode_batches(batches):
         # The Arrow columns Spark hands over go to the encoder as they
         # are, and its binary array is the output column: no pandas or
@@ -175,6 +177,7 @@ def write_all_splits(
             "shard", _round_robin_shard(num_shards)(F.col("split"))
         ).repartition(num_shards * len(OUTPUT_SPLITS), "split", "shard")
 
+    @drops_zip_finders
     def write_partition(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         import numpy as np
         import pyarrow.compute as pc
@@ -257,6 +260,7 @@ def _round_robin_shard(num_shards: int):
     filter-then-``repartition(N)`` per split. Only the split column
     crosses to Python."""
 
+    @drops_zip_finders
     def shard(batches: Iterator[pa.Array]) -> Iterator[pa.Array]:
         import numpy as np
         import pyarrow.compute as pc

@@ -30,6 +30,7 @@ from ..constants import GZIP_SUFFIX, OUTPUT_SPLITS, TFRECORD_SUFFIX, ZLIB_SUFFIX
 from ..functions import fs
 from ..functions.example_proto import build_batch_decoder
 from ..functions.tfrecord_io import read_shard
+from ..functions.worker import drops_zip_finders
 from ..sinks.artifacts import read_schema_metadata, validate_job_dir
 
 
@@ -39,6 +40,7 @@ def read_tfrecords(
     """Parse TFRecord files into rows of ``struct``."""
     decode = build_batch_decoder(struct)
 
+    @drops_zip_finders
     def parse(batches: Iterator) -> Iterator:
         for rb in batches:
             content = rb.column(0)
