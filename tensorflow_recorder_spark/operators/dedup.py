@@ -26,6 +26,8 @@ the north star requires, designed Spark-first for 100 TB:
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, Window, functions as F
 
 from ..functions.partitioning import spread_to_parallelism
@@ -275,17 +277,10 @@ def lsh_candidate_pairs(
     than the distinct pair set, so replacing that shuffle with a
     filter inside the join stage halved this operator's time at sf0.1.
     """
-    rows_per_band = num_hashes // bands
-    band_structs = []
-    for b in range(bands):
-        slots = [f"mh_{b * rows_per_band + r}" for r in range(rows_per_band)]
-        key = "md5(concat_ws(',', " + ", ".join(slots) + "))"
-        band_structs.append(f"struct({b} as band_idx, {key} as band_key)")
+    slots = [f"mh_{k}" for k in range(num_hashes)]
     banded = signatures.select(
-        F.col(id_col),
-        *[F.col(f"mh_{k}") for k in range(num_hashes)],
-        F.explode(F.expr("array(" + ", ".join(band_structs) + ")")).alias("band"),
-    ).select(id_col, *[f"mh_{k}" for k in range(num_hashes)], "band.band_idx", "band.band_key")
+        id_col, *slots, _band_structs(num_hashes, bands)
+    ).select(id_col, *slots, "band.band_idx", "band.band_key")
 
     left = banded.select(
         F.col(id_col).alias("id_a"),
@@ -299,32 +294,33 @@ def lsh_candidate_pairs(
         "band_idx",
         "band_key",
     )
+    est, not_earlier = _pair_rules(num_hashes, bands)
+    pairs = (
+        left.join(right, ["band_idx", "band_key"])
+        .where((F.col("id_a") < F.col("id_b")) & not_earlier)
+        .select("id_a", "id_b", est)
+    )
+    return pairs.where(F.col("est_jaccard") >= min_est_jaccard)
+
+
+def _pair_rules(num_hashes: int, bands: int):
+    """Column forms of the band-join pair rules over ``a_k``/``b_k``
+    signature slots: ``est_jaccard`` (agreeing slots / num_hashes) and
+    the first-matching-band filter (no band before this row's
+    ``band_idx`` also agrees), which makes a pair sharing several bands
+    appear once."""
+    rpb = num_hashes // bands
     agree = sum(
         F.when(F.col(f"a_{k}") == F.col(f"b_{k}"), 1).otherwise(0)
         for k in range(num_hashes)
     )
-
-    def band_agrees(b: int):
-        cond = F.lit(True)
-        for r in range(rows_per_band):
-            k = b * rows_per_band + r
-            cond = cond & (F.col(f"a_{k}") == F.col(f"b_{k}"))
-        return cond
-
-    # first-matching-band: no band before this row's band_idx also agrees
     not_earlier = F.lit(True)
     for b in range(bands - 1):
-        not_earlier = not_earlier & ~(
-            (F.col("band_idx") > b) & band_agrees(b)
-        )
-    pairs = (
-        left.join(right, ["band_idx", "band_key"])
-        .where((F.col("id_a") < F.col("id_b")) & not_earlier)
-        .select(
-            "id_a", "id_b", (agree / F.lit(float(num_hashes))).alias("est_jaccard")
-        )
-    )
-    return pairs.where(F.col("est_jaccard") >= min_est_jaccard)
+        band_agrees = F.lit(True)
+        for k in range(b * rpb, (b + 1) * rpb):
+            band_agrees = band_agrees & (F.col(f"a_{k}") == F.col(f"b_{k}"))
+        not_earlier = not_earlier & ~((F.col("band_idx") > b) & band_agrees)
+    return (agree / F.lit(float(num_hashes))).alias("est_jaccard"), not_earlier
 
 
 def hashed_shingle_expr(text_col: str, k: int = 5, pre_lowered: bool = False) -> str:
@@ -562,51 +558,449 @@ def _signatures_and_shingles_arrow(
 
 _GIANT_BUCKET_ROWS = 1024
 
-# r12: recommended PRODUCTION threshold for decomposing a giant bucket
-# across TASKS (block-verify stage) instead of verifying it inside one
-# in-task pass. Below ~4096 rows the m x m matrix path handles the
-# bucket in-task in well under a second (4096² byte-writes ~= the
-# 16 MB matrix budget; measured at sf0.1: the 1983-doc family's task
-# is 1.4 s of which most is serializing its own ~1.9M result pairs —
-# a cost deferral relocates but cannot remove), so the block stage's
-# extra stage boundaries (~1 s/query measured) would cost more than
-# the straggler they remove. The LOCAL DEFAULT IS OFF (0): no measured
-# dataset — sf0.1 or the derived decades, whose replicas keep disjoint
-# shingle universes — produces a bucket beyond ~2k rows, so locally
-# the branch would be pure insurance premium. On a real 100 TB corpus
-# whose boilerplate families can exceed the matrix budget set
-# SPARK_GRAFT_DEFER_ROWS=4096 (or pass ``defer_rows``): beyond that
-# size the in-task work grows quadratically while block-stage tasks
-# stay bounded by construction. Parity of the block path is pinned by
-# tests at forced thresholds either way.
-_DEFER_BUCKET_ROWS = 4096
+_PAIR_COLS = ("id_a", "id_b", "est_jaccard", "jaccard")
 
 
-def _bucket_thread_count(m: int, bytes_per_thread: int) -> int:
-    """Thread-pool width for ONE giant bucket's in-task kernels.
+def _pair_schema(id_type):
+    """(id_a, id_b, est_jaccard, jaccard): every verified-pair output."""
+    from pyspark.sql import types as T
 
-    A template-family bucket is a single ``applyInPandas`` group — one
-    task, the stage's straggler while sibling tasks finish and leave
-    cores idle (local[32] and a 100 TB executor alike: the group is
-    unsplittable by the shuffle). The heavy kernels inside it decompose
-    exactly (per-slot paints SUM into the agreement matrix; sgemm
-    panels over 0/1 indicator rows are integer sums < 2^24, exact in
-    float32 under ANY split), and numpy/BLAS release the GIL, so a
-    small in-task thread pool recovers the idle cores without touching
-    the plan. Width: conservative fraction of the machine (the stage's
-    OTHER tasks are still running at stage start), memory-capped by the
-    per-thread scratch the caller will allocate, env-overridable for
-    cluster tuning (``SPARK_GRAFT_BUCKET_THREADS``).
+    return T.StructType(
+        [T.StructField(c, id_type) for c in _PAIR_COLS[:2]]
+        + [T.StructField(c, T.DoubleType()) for c in _PAIR_COLS[2:]]
+    )
+
+
+def _band_structs(num_hashes: int, bands: int):
+    """Explode of one ``(band_idx, band_key)`` struct per LSH band,
+    aliased ``band``. The key is md5 over the band's ``num_hashes //
+    bands`` consecutive ``mh_*`` slots: the one banding every LSH path
+    and its DuckDB oracle share."""
+    rpb = num_hashes // bands
+    structs = []
+    for b in range(bands):
+        slots = ", ".join(f"mh_{b * rpb + r}" for r in range(rpb))
+        structs.append(
+            f"struct({b} as band_idx, md5(concat_ws(',', {slots})) as band_key)"
+        )
+    return F.explode(F.expr("array(" + ", ".join(structs) + ")")).alias("band")
+
+
+def _bucket_thread_count(bytes_per_thread: int) -> int:
+    """Thread-pool width for ONE giant bucket's in-task matrix kernels.
+
+    A template-family bucket sits in one task, the stage's straggler
+    while sibling tasks finish and leave cores idle. Its slot paints SUM
+    into the agreement matrix and its sgemm panels over 0/1 indicator
+    rows are integer sums < 2^24 (exact in float32 under ANY split), and
+    numpy/BLAS release the GIL, so a small in-task pool recovers the
+    idle cores without touching the plan. Width: a conservative fraction
+    of the machine (the stage's OTHER tasks are still running at stage
+    start), capped by the per-thread scratch the caller will allocate.
+    On a 4-core host at sf0.1 (10 alternating pairs, noop sink) the pool
+    gave 2.01 s against 2.29 s single-threaded for
+    ``_lsh_verified_fused(..., 0.25, 0.3)``.
     """
     import os
 
-    env = os.environ.get("SPARK_GRAFT_BUCKET_THREADS")
-    if env is not None:
-        cap = max(1, int(env))
-    else:
-        cap = max(2, min(8, (os.cpu_count() or 8) // 4))
+    cap = max(2, min(8, (os.cpu_count() or 8) // 4))
     mem_cap = max(1, (256 << 20) // max(bytes_per_thread, 1))
     return max(1, min(cap, mem_cap))
+
+
+class _CsrSets:
+    """One bucket's (or verify block's) shingle arrays as a CSR family
+    over their own vocabulary: row i's shingle ids are
+    ``indices[indptr[i]:indptr[i + 1]]``. The per-doc arrays are already
+    distinct (``array_distinct`` of the gram strings, then hashed), so
+    set sizes are the raw array lengths, the ``size(__sh)`` the SQL
+    paths divide by. The delta decomposition and the dense float32
+    indicator matrix are built on first use and shared by every chunk
+    of the family."""
+
+    def __init__(self, sh_vals):
+        import numpy as np
+
+        arrs = [np.asarray(a, dtype=np.int64) for a in sh_vals]
+        self.lens = np.fromiter(map(len, arrs), np.int64, len(arrs))
+        self.sizes = self.lens.astype(np.float64)
+        flat = np.concatenate(arrs) if arrs else np.zeros(0, np.int64)
+        vocab, indices = np.unique(flat, return_inverse=True)
+        self.nv = len(vocab)
+        self.indices = indices.astype(np.int64)
+        self.indptr = np.zeros(len(arrs) + 1, dtype=np.int64)
+        np.cumsum(self.lens, out=self.indptr[1:])
+
+    @functools.cached_property
+    def delta_lens(self):
+        """``(core size, |M_i| + |P_i| per row)`` of :func:`_delta_csr`
+        without building the decomposition, for the delta kernel's cost
+        law (exact while no row repeats an id; only an md5-slice
+        collision inside one doc's shingle set repeats one)."""
+        import numpy as np
+
+        core = np.bincount(self.indices, minlength=self.nv) > (len(self.lens) >> 1)
+        csize = int(core.sum())
+        if not csize:
+            return 0, None
+        seen = np.concatenate(([0], np.cumsum(core[self.indices])))
+        in_core = seen[self.indptr[1:]] - seen[self.indptr[:-1]]
+        return csize, self.lens + csize - 2 * in_core
+
+    @functools.cached_property
+    def delta(self):
+        return _delta_csr(self.indptr, self.indices, self.nv)
+
+    @functools.cached_property
+    def f32(self):
+        import numpy as np
+
+        m = len(self.lens)
+        dense = np.zeros((m, self.nv), dtype=np.float32)
+        rows = np.repeat(np.arange(m, dtype=np.int64), self.lens)
+        dense[rows, self.indices] = 1.0
+        return dense
+
+
+def _blas_panel(f32, panel, threads):
+    """``f32[r0:r1] @ f32[c0:c1].T``, its row range split across an
+    in-task pool when ``threads`` > 1 (each cell is a sum of 0/1
+    products, an integer < 2^24, exact in float32 under any split)."""
+    import numpy as np
+
+    r0, r1, c0, c1 = panel
+    rows, cols = f32[r0:r1], f32[c0:c1].T
+    if threads <= 1:
+        return rows @ cols
+    from concurrent.futures import ThreadPoolExecutor
+
+    out = np.empty((r1 - r0, c1 - c0), dtype=np.float32)
+    step = -(-(r1 - r0) // threads)
+    spans = range(0, r1 - r0, step)
+    with ThreadPoolExecutor(len(spans)) as pool:
+        list(
+            pool.map(
+                lambda p: np.matmul(
+                    rows[p : p + step], cols, out=out[p : p + step]
+                ),
+                spans,
+            )
+        )
+    return out
+
+
+def _intersect_counts(sets, ai, bi, panel=None, threads=1):
+    """Exact ``|A ∩ B|`` (as float64) for the row pairs ``(ai, bi)`` of
+    a :class:`_CsrSets` family, from whichever of four exact kernels
+    its measured cost law (sf0.1) calls cheapest:
+
+    * delta: ~13 ns per element of the two rows' deltas against the
+      family's majority core. On a near-duplicate family (exactly what
+      a survivor-dense bucket is) that is the edit deltas, not the
+      ~300-element sets. Diverse families have an empty core and fall
+      through.
+    * BLAS panel: ~0.04 ns per cell-vocab product of
+      ``f32[r0:r1] @ f32[c0:c1].T``, offered only when the caller passes
+      ``panel=(r0, r1, c0, c1)`` holding every pair and the dense
+      matrix fits 256 MB. ``threads`` splits the panel's rows.
+    * packed-bitset popcount: ~2.2 ns per pair-vocabulary bit.
+    * CSR mask: ~13 ns per partner element.
+    """
+    import numpy as np
+
+    n_rows, nv = len(sets.lens), sets.nv
+    csr_cost = 13.0 * int(sets.lens[bi].sum())
+    pop_cost = 2.2 * len(ai) * nv
+    blas_cost = float("inf")
+    if panel is not None and n_rows * nv * 4 <= (256 << 20):
+        r0, r1, c0, c1 = panel
+        blas_cost = (r1 - r0) * (c1 - c0) * nv * 0.04
+    csize, dlens = sets.delta_lens
+    delta_cost = float("inf")
+    if csize:
+        delta_cost = 13.0 * (int(dlens[ai].sum()) + int(dlens[bi].sum()))
+    if delta_cost < min(blas_cost, csr_cost, pop_cost):
+        inter = _intersect_counts_delta(*sets.delta, ai, bi)
+    elif blas_cost < min(csr_cost, pop_cost):
+        grid = _blas_panel(sets.f32, panel, threads)
+        inter = grid[ai - r0, bi - c0].astype(np.int64)
+    elif pop_cost < csr_cost and n_rows * nv <= (256 << 20):
+        inter = _intersect_counts_popcount(
+            sets.indptr, sets.indices, nv, ai, bi
+        )
+    else:
+        inter = _intersect_counts_csr(sets.indptr, sets.indices, ai, bi)
+    return inter.astype(np.float64)
+
+
+def _jaccard_above(ids, sets, ai, bi, est, thr, panel=None, threads=1):
+    """``(ids[ai], ids[bi], est, jaccard)`` for the pairs whose exact
+    ``jaccard = |A∩B| / (|A| + |B| - |A∩B|)`` (float64) reaches
+    ``thr``, or None when none does."""
+    if len(ai) == 0:
+        return None
+    inter = _intersect_counts(sets, ai, bi, panel, threads)
+    jac = inter / (sets.sizes[ai] + sets.sizes[bi] - inter)
+    keep = jac >= thr
+    if not keep.any():
+        return None
+    return ids[ai[keep]], ids[bi[keep]], est[keep], jac[keep]
+
+
+def _verify_pairs(ids, M8, sets, band_idx, rpb, min_est, thr, ai, bi, panel):
+    """The exact verify every fused bucket loop shares, for candidate
+    row pairs ``(ai, bi)`` of one bucket of band ``band_idx``:
+
+    * est = agreeing signature slots / nh in float64; pairs below
+      ``min_est`` drop;
+    * first matching band: a pair whose EARLIER band also agrees drops,
+      because it is verified in that band's bucket (the staged plan's
+      filter, which makes every pair appear once);
+    * survivors' shingle sets intersect exactly
+      (:func:`_intersect_counts`), and :func:`_jaccard_above` keeps
+      ``jaccard >= thr``.
+
+    Returns ``(id_a, id_b, est_jaccard, jaccard)`` arrays, or None.
+    """
+    eq = M8[ai] == M8[bi]
+    est = eq.sum(axis=1) / float(M8.shape[1])
+    keep = est >= min_est
+    for b in range(band_idx):
+        keep &= ~eq[:, b * rpb : (b + 1) * rpb].all(axis=1)
+    return _jaccard_above(
+        ids, sets, ai[keep], bi[keep], est[keep], thr, panel
+    )
+
+
+def _matrix_candidates(M8, band_idx, rpb, min_est, threads):
+    """Self-join candidates ``(ai, bi, est)``, ai < bi, of a bucket small
+    enough for m x m matrices: the est floor and first-matching-band
+    rule of :func:`_verify_pairs`, read off matrices instead of pair
+    lists. Per-pair gathers cost ~0.7 µs/pair, and a template-family
+    bucket is nearly all pairs (1.92M of the giant sf0.1 bucket's 1.97M
+    pass the floor). So the slot-agreement count matrix is painted from
+    per-slot value groups (docs agreeing on a slot add 1 to their
+    sub-square: O(m² + Σ group²) byte writes, slots split across
+    ``threads``), each earlier band masks its slot-tuple groups the same
+    way, and only survivors become index arrays."""
+    import numpy as np
+
+    m, nh = M8.shape
+
+    def paint_slots(js, out):
+        for j in js:
+            vals = M8[:, j]
+            order = np.argsort(vals, kind="stable")
+            sv = vals[order]
+            starts = np.flatnonzero(np.concatenate(([True], sv[1:] != sv[:-1])))
+            bounds = np.concatenate((starts, [m]))
+            for k in range(len(starts)):
+                grp = order[bounds[k] : bounds[k + 1]]
+                if len(grp) > 1:
+                    out[np.ix_(grp, grp)] += 1
+        return out
+
+    if threads > 1 and nh > 1:
+        from concurrent.futures import ThreadPoolExecutor
+
+        nt = min(threads, nh)
+        with ThreadPoolExecutor(nt) as pool:
+            partials = list(
+                pool.map(
+                    paint_slots,
+                    [range(t, nh, nt) for t in range(nt)],
+                    [np.zeros((m, m), dtype=np.uint8) for _ in range(nt)],
+                )
+            )
+        # uint8 sum is exact: each partial entry <= nh <= 255
+        A = partials[0]
+        for p in partials[1:]:
+            A += p
+    else:
+        A = paint_slots(range(nh), np.zeros((m, m), dtype=np.uint8))
+    K = (A.astype(np.float64) / float(nh)) >= min_est
+    for b in range(band_idx):
+        # group docs agreeing on ALL slots of band b (lexicographic
+        # grouping on the slot tuple)
+        cols = [M8[:, b * rpb + r] for r in range(rpb)]
+        order = np.lexsort(cols[::-1])
+        same = np.ones(m, dtype=bool)
+        same[0] = False
+        for c in cols:
+            sc = c[order]
+            same[1:] &= sc[1:] == sc[:-1]
+        starts = np.flatnonzero(~same)
+        bounds = np.concatenate((starts, [m]))
+        for k in range(len(starts)):
+            grp = order[bounds[k] : bounds[k + 1]]
+            if len(grp) > 1:
+                K[np.ix_(grp, grp)] = False
+    ai, bi = np.nonzero(np.triu(K, k=1))
+    ai, bi = ai.astype(np.int64), bi.astype(np.int64)
+    return ai, bi, A[ai, bi].astype(np.float64) / float(nh)
+
+
+def _triangle_chunks(m, chunk_pairs):
+    """Self-join pairs i < j of m rows, in chunks of whole rows holding
+    ~``chunk_pairs`` pairs: ``(ai, bi, panel)`` per chunk, enumerated
+    directly (no chunk x m bool matrix to allocate and scan)."""
+    import numpy as np
+
+    step = max(1, chunk_pairs // m)
+    for r0 in range(0, m - 1, step):
+        r1 = min(r0 + step, m - 1)
+        lens_i = m - 1 - np.arange(r0, r1, dtype=np.int64)
+        ai = np.repeat(np.arange(r0, r1, dtype=np.int64), lens_i)
+        skip = np.repeat(np.cumsum(lens_i) - lens_i, lens_i)
+        bi = np.arange(len(ai), dtype=np.int64) - skip + ai + 1
+        yield ai, bi, (r0, r1, 0, m)
+
+
+def _cross_chunks(na, m, chunk_pairs):
+    """Every pair of index row [0, na) x batch row [na, m), in chunks of
+    whole index rows holding ~``chunk_pairs`` pairs."""
+    import numpy as np
+
+    step = max(1, chunk_pairs // (m - na))
+    for r0 in range(0, na, step):
+        r1 = min(r0 + step, na)
+        ai = np.repeat(np.arange(r0, r1, dtype=np.int64), m - na)
+        bi = np.tile(np.arange(na, m, dtype=np.int64), r1 - r0)
+        yield ai, bi, (r0, r1, na, m)
+
+
+def _verify_bucket(
+    band_idx,
+    ids,
+    M8,
+    sh_vals,
+    side,
+    *,
+    rpb,
+    min_est,
+    thr,
+    chunk_pairs=1 << 20,
+    matrix_budget=1 << 24,
+    giant_rows=_GIANT_BUCKET_ROWS,
+    giant_threads=None,
+):
+    """Every verified pair of ONE LSH bucket of band ``band_idx``, as
+    ``(id_a, id_b, est_jaccard, jaccard)`` arrays or None.
+
+    * Self-join (``side`` None; rows id-sorted): pairs i < j, so
+      id_a < id_b. With m² <= ``matrix_budget`` the candidates come
+      from :func:`_matrix_candidates`, on an in-task pool from
+      ``giant_rows`` rows on (``giant_threads`` overrides its width; both
+      are test hooks). Beyond it, :func:`_triangle_chunks` bounds peak
+      memory to O(chunk) pairs however large the bucket.
+    * Bipartite (``side`` 0 = index, 1 = batch; index rows first): every
+      index x batch pair, self-pairs included when an id is on both
+      sides (:func:`_cross_chunks`).
+
+    Each chunk goes through :func:`_verify_pairs` with its BLAS panel.
+    """
+    import numpy as np
+
+    m = len(ids)
+    if side is None and m * m <= matrix_budget:
+        threads = 1
+        if m >= giant_rows:
+            threads = (
+                max(1, giant_threads)
+                if giant_threads is not None
+                else _bucket_thread_count(m * m)
+            )
+        ai, bi, est = _matrix_candidates(M8, band_idx, rpb, min_est, threads)
+        if len(ai) == 0:
+            return None
+        return _jaccard_above(
+            ids, _CsrSets(sh_vals), ai, bi, est, thr, (0, m, 0, m), threads
+        )
+    if side is None:
+        chunks = _triangle_chunks(m, chunk_pairs)
+    else:
+        na = int(np.count_nonzero(side == 0))
+        if na in (0, m):
+            return None
+        chunks = _cross_chunks(na, m, chunk_pairs)
+    sets = _CsrSets(sh_vals)
+    parts = []
+    for ai, bi, panel in chunks:
+        out = _verify_pairs(ids, M8, sets, band_idx, rpb, min_est, thr, ai, bi, panel)
+        if out is not None:
+            parts.append(out)
+    if not parts:
+        return None
+    return tuple(np.concatenate(c) for c in zip(*parts))
+
+
+def _bucket_pass(id_col: str, nh: int, **verify_kw):
+    """``mapInPandas`` body over a (band_idx, band_key) hash partition of
+    a fused dedup: ONE call per partition, not one ``applyInPandas``
+    group per bucket (that per-group bookkeeping over ~90k mostly
+    singleton buckets cost ~1.5 s/task at sf0.1 against ~0.3 s of pair
+    math). One concat + one lexsort makes every bucket a contiguous
+    slice, id-sorted; a ``__side`` column, when present, orders index
+    rows before batch rows. Each slice of >= 2 rows goes to
+    :func:`_verify_bucket` with ``verify_kw``."""
+    import numpy as np
+    import pandas as pd
+
+    def run(batches):
+        frames = list(batches)
+        if not frames:
+            return
+        pdf = pd.concat(frames, ignore_index=True) if len(frames) > 1 else frames[0]
+        if len(pdf) == 0:
+            return
+        band = pdf["band_idx"].to_numpy()
+        key = pdf["band_key"].to_numpy()
+        ids = pdf[id_col].to_numpy()
+        side = pdf["__side"].to_numpy() if "__side" in pdf else None
+        keys = (ids, key, band) if side is None else (ids, side, key, band)
+        order = np.lexsort(keys)
+        band, key, ids = band[order], key[order], ids[order]
+        if side is not None:
+            side = side[order]
+        M8 = np.column_stack([pdf[f"mh_{j}"].to_numpy()[order] for j in range(nh)])
+        sh = pdf["__sh"].to_numpy()[order]
+        new = np.concatenate(
+            ([True], (band[1:] != band[:-1]) | (key[1:] != key[:-1]))
+        )
+        bounds = np.append(np.flatnonzero(new), len(ids)).tolist()
+        res = []
+        for lo, hi in zip(bounds[:-1], bounds[1:]):
+            if hi - lo < 2:
+                continue
+            out = _verify_bucket(
+                int(band[lo]),
+                ids[lo:hi],
+                M8[lo:hi],
+                sh[lo:hi],
+                None if side is None else side[lo:hi],
+                **verify_kw,
+            )
+            if out is not None:
+                res.append(out)
+        if res:
+            yield pd.DataFrame(
+                {c: np.concatenate(v) for c, v in zip(_PAIR_COLS, zip(*res))}
+            )
+
+    return run
+
+
+def _banded_payload(df, text_col, id_col, num_hashes, bands, shingle_len, side=None):
+    """One row per (doc, band) carrying the doc's whole verify payload:
+    ``[__side,] id, mh_0..mh_{n-1}, __sh, band_idx, band_key``."""
+    combo = _signatures_and_shingles_arrow(
+        df, text_col, id_col, num_hashes, shingle_len
+    )
+    payload = [id_col, *[f"mh_{j}" for j in range(num_hashes)], "__sh"]
+    banded = combo.select(*payload, _band_structs(num_hashes, bands)).select(
+        *payload, "band.band_idx", "band.band_key"
+    )
+    return banded if side is None else banded.withColumn("__side", F.lit(side))
 
 
 def _lsh_verified_fused(
@@ -619,44 +1013,13 @@ def _lsh_verified_fused(
     min_est_jaccard: float,
     threshold: float,
     chunk_pairs: int = 1 << 20,
-    giant_rows: int | None = None,
+    giant_rows: int = _GIANT_BUCKET_ROWS,
     giant_threads: int | None = None,
     matrix_budget: int = 1 << 24,
-    defer_rows: int | None = None,
-    defer_block: int = 512,
 ) -> DataFrame:
     """Fused single-shuffle fuzzy dedup (r11): signatures + shingles in
     one map pass, band explode, and candidate generation + exact-
     Jaccard verification INSIDE each LSH bucket.
-
-    r12 (verdict item 3): two structural changes.
-
-    * The bucket verify is ONE ``mapInPandas`` call per shuffle
-      partition instead of one ``applyInPandas`` group per bucket:
-      the hash repartition already co-locates each bucket's rows, and
-      the per-group pandas bookkeeping over ~90k mostly-singleton
-      buckets was the stage's dominant cost at sf0.1 (~1.5 s/task vs
-      ~0.3 s of pair math). The partition pass pays one concat + one
-      lexsort and verifies buckets as numpy slices.
-    * A GIANT bucket (>= ``defer_rows`` docs when enabled) is not
-      verified in-task — that group's O(m²) pair work is one
-      unsplittable task, the stage's straggler on local[32] and on a
-      saturated 100 TB executor alike (the r11 in-task thread pool
-      only recovered idle SIBLING cores, a local-mode-shaped bet).
-      A second pass over the SAME exchange (AQE stage reuse: the
-      corpus signature pass and its shuffle run once) re-emits only
-      giant buckets' payload into <= 16 contiguous id-range blocks of
-      ~``defer_block`` docs; the block stage keyed (band_key, band,
-      block_a, block_b) gives every upper-triangle block of the pair
-      matrix its OWN task (exact decomposition: each i<j pair exists
-      in exactly one block pair, and id-range blocks keep cross-block
-      pairs id-ordered). Default OFF locally / enable at 4096 in
-      production — see _DEFER_BUCKET_ROWS for the measured tradeoff
-      (below the matrix budget the in-task pass is sub-second and
-      dominated by serializing its own result pairs, which deferral
-      relocates but cannot remove; the branch's stage boundaries cost
-      ~1 s/query). ``defer_rows=0`` (the local default, env
-      SPARK_GRAFT_DEFER_ROWS) yields the single-stage plan.
 
     The staged pipeline (:func:`lsh_verified_pairs` machinery) runs
     ~13 Spark jobs at sf0.1: band self-join, candidate checkpoint,
@@ -668,13 +1031,15 @@ def _lsh_verified_fused(
     signatures (carried with the docs), and the exact Jaccard needs
     only the two shingle arrays (also carried). So this plan ships each
     doc's (signature, shingle array) payload into its ``bands`` buckets
-    — ONE exchange, ~bands x corpus payload — and one cogroup-free
-    ``applyInPandas`` per bucket enumerates in-bucket pairs
-    (chunked, est-filtered, first-band-deduped) and verifies survivors
-    with the same popcount/CSR kernels as the blocked path. Measured at
-    sf0.1: e1_lsh_verified 9.5 s -> ~2.5 s, bit-identical output (the
-    per-pair arithmetic is unchanged: est = agreeing_slots/num_hashes
-    in float64, jaccard = |A∩B|/(|A|+|B|-|A∩B|) in float64).
+    — ONE exchange, ~bands x corpus payload — and one ``mapInPandas``
+    call per shuffle partition (:func:`_bucket_pass`) verifies every
+    bucket as numpy slices (:func:`_verify_bucket`). Measured at sf0.1:
+    e1_lsh_verified 9.5 s -> ~2.5 s, bit-identical output (the per-pair
+    arithmetic is unchanged: est = agreeing_slots/num_hashes in
+    float64, jaccard = |A∩B|/(|A|+|B|-|A∩B|) in float64).
+
+    Every bucket size is verified in its task: below the matrix budget
+    on m x m matrices, above it in bounded pair chunks.
 
     Worst-case note: a degenerate bucket (m near-identical docs) costs
     O(m^2) est-filter compares here — the SAME asymptotics as the
@@ -682,606 +1047,28 @@ def _lsh_verified_fused(
     JVM; the fused form does them as vectorized int compares without
     materializing the non-candidates, so it is never worse.
     """
-    import os
-
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    nh, rpb = num_hashes, num_hashes // bands
-    combo = _signatures_and_shingles_arrow(
-        df, text_col, id_col, num_hashes, shingle_len
+    banded = _banded_payload(
+        df, text_col, id_col, num_hashes, bands, shingle_len
     )
-    band_structs = []
-    for b in range(bands):
-        slots = [f"mh_{b * rpb + r}" for r in range(rpb)]
-        key = "md5(concat_ws(',', " + ", ".join(slots) + "))"
-        band_structs.append(f"struct({b} as band_idx, {key} as band_key)")
-    banded = combo.select(
-        F.col(id_col),
-        *[F.col(f"mh_{j}") for j in range(nh)],
-        F.col("__sh"),
-        F.explode(F.expr("array(" + ", ".join(band_structs) + ")")).alias(
-            "band"
-        ),
-    ).select(
+    verify = _bucket_pass(
         id_col,
-        *[f"mh_{j}" for j in range(nh)],
-        "__sh",
-        "band.band_idx",
-        "band.band_key",
+        num_hashes,
+        rpb=num_hashes // bands,
+        min_est=float(min_est_jaccard),
+        thr=float(threshold),
+        chunk_pairs=chunk_pairs,
+        matrix_budget=matrix_budget,
+        giant_rows=giant_rows,
+        giant_threads=giant_threads,
     )
-
-    id_type = df.schema[id_col].dataType
-    out_schema = T.StructType(
-        [
-            T.StructField("id_a", id_type),
-            T.StructField("id_b", id_type),
-            T.StructField("est_jaccard", T.DoubleType()),
-            T.StructField("jaccard", T.DoubleType()),
-        ]
-    )
-    min_est = float(min_est_jaccard)
-    thr = float(threshold)
-    defer_schema = T.StructType(
-        [
-            T.StructField("__gk", T.StringType()),
-            T.StructField("__ga", T.IntegerType()),
-            T.StructField("__gb", T.IntegerType()),
-            T.StructField("__blk", T.IntegerType()),
-            T.StructField("__band", T.IntegerType()),
-            T.StructField("__id", id_type),
-            T.StructField("__mh", T.ArrayType(T.LongType())),
-            T.StructField("__shd", T.ArrayType(T.LongType())),
-        ]
-    )
-
-    _none4 = (
-        np.zeros(0, dtype=np.int64),
-        np.zeros(0, dtype=np.int64),
-        np.zeros(0, dtype=np.float64),
-        np.zeros(0, dtype=np.float64),
-    )
-
-    def verify_arrays(band_idx, ids, M8, sh_vals):
-        """Candidate enumeration + exact verification for ONE bucket,
-        given id-sorted numpy inputs (ids, nh-column signature matrix,
-        object array of shingle arrays). Returns (id_a, id_b, est, jac)
-        arrays — the r12 partition pass calls this per bucket SLICE so
-        no per-group pandas frame is ever built (the r11 per-group
-        applyInPandas overhead over ~90k mostly-singleton buckets was
-        the stage's real cost: ~1.5 s/task of group bookkeeping against
-        ~0.3 s of pair math)."""
-        empty = _none4
-        m = len(ids)
-        arrs = [np.asarray(a, dtype=np.int64) for a in sh_vals]
-        lens = np.fromiter((len(a) for a in arrs), np.int64, m)
-        flat = np.concatenate(arrs)
-        vocab, indices = np.unique(flat, return_inverse=True)
-        indices = indices.astype(np.int64)
-        indptr = np.zeros(m + 1, dtype=np.int64)
-        np.cumsum(lens, out=indptr[1:])
-        sizes = lens.astype(np.float64)
-
-        g_rows = _GIANT_BUCKET_ROWS if giant_rows is None else giant_rows
-
-        def pick_threads(bytes_per_thread):
-            if m < g_rows:
-                return 1
-            if giant_threads is not None:
-                return max(1, giant_threads)
-            return _bucket_thread_count(m, bytes_per_thread)
-
-        # m x m MATRIX fast path (r11): per-pair fancy-index gathers
-        # cost ~0.7 µs/pair in numpy, and a template-family bucket is
-        # nearly ALL pairs (measured: 1.92M of the giant sf0.1
-        # bucket's 1.97M pairs survive the est filter — the filter WAS
-        # the task's wall at 1.3 s). Build the slot-agreement count
-        # matrix from per-slot VALUE GROUPS instead: docs agreeing on
-        # a slot form groups, and each group paints a sub-square of
-        # A (+1 per slot) — O(m² + Σ group²) byte writes. The
-        # earlier-band dedup is the same construction over combined
-        # band keys into a bool mask. Every pair's est and the filter
-        # then read straight off the matrices (~0.1 s for the giant
-        # bucket), and only SURVIVORS are ever materialized as pair
-        # index arrays. Identical semantics: est = agreeing slots / nh,
-        # drop if any earlier band fully agrees.
-        if m * m <= matrix_budget:  # <= 64 MB of uint8+bool matrices
-            # giant-bucket in-task threading (r11 continuation): the
-            # slot paints and the sgemm panels below decompose exactly
-            # — see _bucket_thread_count. 1 thread (the common case)
-            # takes the identical serial code path. giant_rows /
-            # giant_threads are test hooks (closure-captured, so they
-            # reach the executors by value).
-            nthreads = pick_threads(m * m)
-
-            def paint_slots(js, out):
-                for j in js:
-                    vals = M8[:, j]
-                    order2 = np.argsort(vals, kind="stable")
-                    sv = vals[order2]
-                    starts = np.flatnonzero(
-                        np.concatenate(([True], sv[1:] != sv[:-1]))
-                    )
-                    bounds = np.concatenate((starts, [m]))
-                    for k in range(len(starts)):
-                        grp = order2[bounds[k] : bounds[k + 1]]
-                        if len(grp) > 1:
-                            out[np.ix_(grp, grp)] += 1
-                return out
-
-            if nthreads > 1 and nh > 1:
-                from concurrent.futures import ThreadPoolExecutor
-
-                nt = min(nthreads, nh)
-                slot_sets = [list(range(t, nh, nt)) for t in range(nt)]
-                with ThreadPoolExecutor(nt) as pool:
-                    partials = list(
-                        pool.map(
-                            paint_slots,
-                            slot_sets,
-                            [
-                                np.zeros((m, m), dtype=np.uint8)
-                                for _ in range(nt)
-                            ],
-                        )
-                    )
-                # uint8 sum is exact: each partial entry <= nh <= 255
-                A = partials[0]
-                for p in partials[1:]:
-                    A += p
-            else:
-                A = paint_slots(range(nh), np.zeros((m, m), dtype=np.uint8))
-            # est floor in exact float (same comparison as the chunked
-            # path: agree / nh >= min_est)
-            K = (A.astype(np.float64) / float(nh)) >= min_est
-            for b in range(band_idx):
-                # combined band key: group docs agreeing on ALL slots
-                # of band b (lexicographic grouping on the slot tuple)
-                cols = [M8[:, b * rpb + r] for r in range(rpb)]
-                order2 = np.lexsort(cols[::-1])
-                same = np.ones(m, dtype=bool)
-                same[0] = False
-                for c in cols:
-                    sc = c[order2]
-                    same[1:] &= sc[1:] == sc[:-1]
-                # group boundaries where not same
-                starts = np.flatnonzero(~same)
-                bounds = np.concatenate((starts, [m]))
-                for k in range(len(starts)):
-                    grp = order2[bounds[k] : bounds[k + 1]]
-                    if len(grp) > 1:
-                        K[np.ix_(grp, grp)] = False
-            K = np.triu(K, k=1)
-            ai, bi = np.nonzero(K)
-            if len(ai) == 0:
-                return empty
-            ai = ai.astype(np.int64)
-            bi = bi.astype(np.int64)
-            est = A[ai, bi].astype(np.float64) / float(nh)
-            nv = len(vocab)
-            csr_cost = 13.0 * (int(lens[bi].sum()) if len(bi) else 0)
-            blas_cost = m * m * nv * 0.04
-            budget_ok = m * nv * 4 <= (256 << 20)
-            if budget_ok and blas_cost < csr_cost:
-                Mf32 = np.zeros((m, nv), dtype=np.float32)
-                rws = np.repeat(np.arange(m, dtype=np.int64), lens)
-                Mf32[rws, indices] = 1.0
-                if nthreads > 1:
-                    # panel sgemm across the in-task pool: every G cell
-                    # is a sum of 0/1 products (an integer < 2^24),
-                    # exact in float32 under any panel split
-                    from concurrent.futures import ThreadPoolExecutor
-
-                    G = np.empty((m, m), dtype=np.float32)
-                    step = -(-m // nthreads)
-                    spans = [
-                        (p0, min(p0 + step, m))
-                        for p0 in range(0, m, step)
-                    ]
-                    with ThreadPoolExecutor(len(spans)) as pool:
-                        list(
-                            pool.map(
-                                lambda s: np.matmul(
-                                    Mf32[s[0] : s[1]],
-                                    Mf32.T,
-                                    out=G[s[0] : s[1]],
-                                ),
-                                spans,
-                            )
-                        )
-                else:
-                    G = Mf32 @ Mf32.T
-                inter = G[ai, bi].astype(np.int64).astype(np.float64)
-            else:
-                inter = _intersect_counts_csr(
-                    indptr, indices, ai, bi
-                ).astype(np.float64)
-            jac = inter / (sizes[ai] + sizes[bi] - inter)
-            keep2 = jac >= thr
-            if not keep2.any():
-                return empty
-            return (
-                ids[ai[keep2]],
-                ids[bi[keep2]],
-                est[keep2],
-                jac[keep2],
-            )
-
-        # chunked path (m^2 beyond the matrix budget — at sf1+ the
-        # template family IS this case). Chunks are independent, so
-        # above the giant threshold they run on the same in-task pool
-        # as the matrix path (identical arithmetic chunk by chunk; the
-        # shared Mf32/delta lazies become lock-guarded one-time
-        # builds). ~40 B/pair of per-chunk scratch caps the pool width.
-        import threading
-
-        state = {"Mf32": None, "delta": None}
-        state_lock = threading.Lock()
-
-        def get_delta(nv):
-            with state_lock:
-                if state["delta"] is None:
-                    state["delta"] = _delta_csr(indptr, indices, nv)
-                return state["delta"]
-
-        def get_Mf32(nv):
-            with state_lock:
-                if state["Mf32"] is None:
-                    Mf32 = np.zeros((m, nv), dtype=np.float32)
-                    rws = np.repeat(np.arange(m, dtype=np.int64), lens)
-                    Mf32[rws, indices] = 1.0
-                    state["Mf32"] = Mf32
-                return state["Mf32"]
-
-        # enumerate i<j pairs in row chunks so peak memory is
-        # O(chunk) pairs however large the bucket
-        rows_per_chunk = max(1, chunk_pairs // m)
-
-        def do_chunk(r0):
-            r1 = min(r0 + rows_per_chunk, m - 1)
-            # direct i<j enumeration for rows [r0, r1): no (chunk x m)
-            # bool allocation (r11: the giant template bucket holds
-            # ~2M pairs; allocation + nonzero was measurable there)
-            lens_i = m - 1 - np.arange(r0, r1, dtype=np.int64)
-            total = int(lens_i.sum())
-            if total == 0:
-                return None
-            cum0 = np.concatenate(([0], np.cumsum(lens_i[:-1])))
-            ai = np.repeat(np.arange(r0, r1, dtype=np.int64), lens_i)
-            bi = (
-                np.arange(total, dtype=np.int64)
-                - np.repeat(cum0, lens_i)
-                + ai
-                + 1
-            )
-            # est filter: gather each side's signature ROWS once, then
-            # one vectorized compare — ~4x fewer fancy-index passes
-            # than the previous per-slot M8[ai, j] gathers (r11; the
-            # filter dominates the giant-bucket task)
-            eq = M8[ai] == M8[bi]
-            est = eq.sum(axis=1) / float(nh)
-            keep = est >= min_est
-            # first-matching-band: drop the pair here unless no EARLIER
-            # band also agrees (identical to the staged plan's filter)
-            for b in range(band_idx):
-                keep &= ~eq[:, b * rpb : (b + 1) * rpb].all(axis=1)
-            # this band must actually agree (it does by construction —
-            # same band_key — but hash collisions of md5(concat) cannot
-            # fake slot equality because band_key IS derived from the
-            # slots; no extra check needed)
-            ai, bi, est = ai[keep], bi[keep], est[keep]
-            if len(ai) == 0:
-                return None
-            # Kernel choice per chunk from four measured cost laws
-            # (all exact): the DELTA kernel intersects against the
-            # bucket's majority core — on a near-duplicate family
-            # (exactly what a surviving-pair-dense bucket is) per-pair
-            # work is the tiny edit deltas, not the ~300-element sets
-            # (measured: the sf0.1 giant 1983-doc bucket's 1.9M
-            # surviving pairs verify in ~0.3 s vs ~2 s of sgemm);
-            # BLAS row-block matmul ~0.04 ns per cell-vocab product
-            # (float32 sgemm; counts < 2^24 so exact), CSR mask kernel
-            # ~13 ns per partner element, packed-bitset popcount
-            # ~2.2 ns per pair-vocab-bit. Diverse buckets have an
-            # empty core and fall through to the other three.
-            nv = len(vocab)
-            csize, Mip, Mix, Pip, Pix = get_delta(nv)
-            dlens = (Mip[1:] - Mip[:-1]) + (Pip[1:] - Pip[:-1])
-            delta_cost = (
-                13.0 * (int(dlens[ai].sum()) + int(dlens[bi].sum()))
-                if csize
-                else float("inf")
-            )
-            blas_cost = (r1 - r0) * m * nv * 0.04
-            csr_cost = 13.0 * (int(lens[bi].sum()) if len(bi) else 0)
-            pop_cost = 2.2 * len(ai) * nv
-            budget_ok = m * nv * 4 <= (256 << 20)
-            if delta_cost < min(blas_cost, csr_cost, pop_cost):
-                inter = _intersect_counts_delta(
-                    csize, Mip, Mix, Pip, Pix, ai, bi
-                ).astype(np.float64)
-            elif budget_ok and blas_cost < min(csr_cost, pop_cost):
-                Mf32 = get_Mf32(nv)
-                panel = Mf32[r0:r1] @ Mf32.T
-                inter = panel[ai - r0, bi].astype(np.int64).astype(
-                    np.float64
-                )
-            elif pop_cost < csr_cost and m * nv <= (256 << 20):
-                inter = _intersect_counts_popcount(
-                    indptr, indices, nv, ai, bi
-                ).astype(np.float64)
-            else:
-                inter = _intersect_counts_csr(
-                    indptr, indices, ai, bi
-                ).astype(np.float64)
-            jac = inter / (sizes[ai] + sizes[bi] - inter)
-            keep2 = jac >= thr
-            if not keep2.any():
-                return None
-            return (
-                ids[ai[keep2]],
-                ids[bi[keep2]],
-                est[keep2],
-                jac[keep2],
-            )
-
-        starts = list(range(0, m - 1, rows_per_chunk))
-        cthreads = min(pick_threads(chunk_pairs * 40), max(len(starts), 1))
-        if cthreads > 1:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(cthreads) as pool:
-                frames = [
-                    f for f in pool.map(do_chunk, starts) if f is not None
-                ]
-        else:
-            frames = [f for f in map(do_chunk, starts) if f is not None]
-        if not frames:
-            return empty
-        return tuple(
-            np.concatenate([f[c] for f in frames]) for c in range(4)
-        )
-
-    if defer_rows is None:
-        # scale knob — rationale and the measured ~1 s/query premium
-        # of keeping the branch in-plan are at _DEFER_BUCKET_ROWS and
-        # in OPTIMIZATION_r12.md §3; local default off, production
-        # SPARK_GRAFT_DEFER_ROWS=4096 for corpora whose near-dup
-        # families can exceed the matrix budget.
-        d_rows = int(os.environ.get("SPARK_GRAFT_DEFER_ROWS", "0"))
-    else:
-        d_rows = int(defer_rows)
-
-    def _prep_partition(batches):
-        """Recover the partition's buckets: the hash repartition on
-        (band_idx, band_key) co-locates every bucket's rows, so one
-        concat + one lexsort makes buckets contiguous AND id-sorted
-        within each bucket (same per-bucket id order as the r11
-        per-group argsort — ids are unique, stability is moot).
-        Returns (bi, bk, ids, M8, sh, starts, bounds) or None. r12:
-        this replaces the per-bucket ``groupBy().applyInPandas`` —
-        profiled at sf0.1, that stage spent ~1.5 s/task building ~90k
-        per-group pandas frames (most buckets are singletons) against
-        ~0.3 s of pair math; the partition pass pays one concat + one
-        sort and skips singleton buckets with a slice bound check."""
-        frames = [f for f in batches]
-        if not frames:
-            return None
-        pdf = (
-            pd.concat(frames, ignore_index=True)
-            if len(frames) > 1
-            else frames[0]
-        )
-        if len(pdf) == 0:
-            return None
-        bi_all = pdf["band_idx"].to_numpy()
-        bk_all = pdf["band_key"].to_numpy()
-        ids_all = pdf[id_col].to_numpy()
-        order = np.lexsort((ids_all, bk_all, bi_all))
-        bi_all = bi_all[order]
-        bk_all = bk_all[order]
-        ids_all = ids_all[order]
-        M8_all = np.column_stack(
-            [pdf[f"mh_{j}"].to_numpy()[order] for j in range(nh)]
-        )
-        sh_all = pdf["__sh"].to_numpy()[order]
-        n = len(ids_all)
-        newgrp = np.concatenate(
-            ([True], (bi_all[1:] != bi_all[:-1]) | (bk_all[1:] != bk_all[:-1]))
-        )
-        starts = np.flatnonzero(newgrp)
-        bounds = np.concatenate((starts, [n]))
-        return bi_all, bk_all, ids_all, M8_all, sh_all, starts, bounds
-
-    def pairs_pass(batches):
-        """Verify every non-giant bucket of the partition; giant
-        buckets (>= d_rows) are skipped here — the defer pass (same
-        reused exchange) re-emits their payload for the block stage."""
-        prep = _prep_partition(batches)
-        if prep is None:
-            return
-        bi_all, _bk, ids_all, M8_all, sh_all, starts, bounds = prep
-        res = []
-        for k in range(len(starts)):
-            lo, hi = int(bounds[k]), int(bounds[k + 1])
-            m = hi - lo
-            if m < 2 or (d_rows and m >= d_rows):
-                continue
-            out = verify_arrays(
-                int(bi_all[lo]), ids_all[lo:hi], M8_all[lo:hi], sh_all[lo:hi]
-            )
-            if len(out[0]):
-                res.append(out)
-        if res:
-            yield pd.DataFrame(
-                {
-                    "id_a": np.concatenate([r[0] for r in res]),
-                    "id_b": np.concatenate([r[1] for r in res]),
-                    "est_jaccard": np.concatenate([r[2] for r in res]),
-                    "jaccard": np.concatenate([r[3] for r in res]),
-                }
-            )
-
-    def defer_pass(batches):
-        """mapInArrow pass emitting ONLY giant buckets' (signature,
-        shingle) payload rows, keyed for the block stage: <= 16
-        contiguous id-range blocks of ~defer_block rows; each row
-        ships into its ``nblocks`` block-pair groups (pair (i, j)
-        lands in exactly one group, and id-range blocks keep
-        cross-block pairs id-ordered so id_a < id_b needs no per-pair
-        compare downstream). Arrow-native group counts short-circuit
-        the common case: when no bucket reaches ``d_rows`` the pass
-        returns after one zero-copy count — no pandas conversion of
-        the payload ever happens (measured: the pandas-converting
-        variant cost ~0.3 s/query of pure insurance at sf0.1)."""
-        import pyarrow as pa
-        import pyarrow.compute as pc
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        tbl_parts = [pa.Table.from_batches([b]) for b in batches]
-        if not tbl_parts:
-            return
-        t = pa.concat_tables(tbl_parts)
-        if t.num_rows == 0:
-            return
-        counts = t.group_by(["band_idx", "band_key"]).aggregate(
-            [([], "count_all")]
-        )
-        giant = counts.filter(
-            pc.greater_equal(counts["count_all"], pa.scalar(max(d_rows, 2)))
-        )
-        if giant.num_rows == 0:
-            return
-        arrow_out = to_arrow_schema(defer_schema)
-        for g in range(giant.num_rows):
-            band = giant["band_idx"][g].as_py()
-            gk = giant["band_key"][g].as_py()
-            rows = t.filter(
-                pc.and_(
-                    pc.equal(t["band_idx"], pa.scalar(band)),
-                    pc.equal(t["band_key"], pa.scalar(gk)),
-                )
-            )
-            pdf = rows.to_pandas()
-            m = len(pdf)
-            ids = pdf[id_col].to_numpy()
-            order = np.argsort(ids, kind="stable")
-            ids = ids[order]
-            M8 = np.column_stack(
-                [pdf[f"mh_{j}"].to_numpy()[order] for j in range(nh)]
-            )
-            sh = pdf["__sh"].to_numpy()[order]
-            nblocks = min(16, max(2, -(-m // max(1, defer_block))))
-            blk = (np.arange(m, dtype=np.int64) * nblocks) // m
-            idx = np.repeat(np.arange(m, dtype=np.int64), nblocks)
-            other = np.tile(np.arange(nblocks, dtype=np.int64), m)
-            rb = blk[idx]
-            out = pd.DataFrame(
-                {
-                    "__gk": str(gk),
-                    "__ga": np.minimum(rb, other).astype(np.int32),
-                    "__gb": np.maximum(rb, other).astype(np.int32),
-                    "__blk": rb.astype(np.int32),
-                    "__band": np.full(len(idx), band, dtype=np.int32),
-                    "__id": ids[idx],
-                    "__mh": [M8[i] for i in idx],
-                    "__shd": [sh[i] for i in idx],
-                }
-            )
-            yield pa.RecordBatch.from_pandas(
-                out, schema=arrow_out, preserve_index=False
-            )
-
-    def block_verify(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {
-                "id_a": pd.Series(dtype="object"),
-                "id_b": pd.Series(dtype="object"),
-                "est_jaccard": pd.Series(dtype="float64"),
-                "jaccard": pd.Series(dtype="float64"),
-            }
-        )
-        ga = int(pdf["__ga"].iloc[0])
-        gb = int(pdf["__gb"].iloc[0])
-        band_idx = int(pdf["__band"].iloc[0])
-        ids = pdf["__id"].to_numpy()
-        blk = pdf["__blk"].to_numpy()
-        order = np.argsort(ids, kind="stable")
-        ids = ids[order]
-        blk = blk[order].astype(np.int64)
-        M8 = np.asarray(
-            [np.asarray(v, dtype=np.int64) for v in pdf["__mh"].iloc[order]]
-        )
-        arrs = [
-            np.asarray(a, dtype=np.int64) for a in pdf["__shd"].iloc[order]
-        ]
-        mm = len(ids)
-        lens = np.fromiter((len(a) for a in arrs), np.int64, mm)
-        flat = np.concatenate(arrs) if mm else np.zeros(0, dtype=np.int64)
-        vocab, indices = np.unique(flat, return_inverse=True)
-        indices = indices.astype(np.int64)
-        indptr = np.zeros(mm + 1, dtype=np.int64)
-        np.cumsum(lens, out=indptr[1:])
-        sizes = lens.astype(np.float64)
-        if ga == gb:
-            ai, bi = np.triu_indices(mm, k=1)
-            ai = ai.astype(np.int64)
-            bi = bi.astype(np.int64)
-        else:
-            a_idx = np.flatnonzero(blk == ga)
-            b_idx = np.flatnonzero(blk == gb)
-            ai = np.repeat(a_idx, len(b_idx)).astype(np.int64)
-            bi = np.tile(b_idx, len(a_idx)).astype(np.int64)
-        if len(ai) == 0:
-            return empty
-        ai, bi, est, jac = _verify_block_pairs(
-            M8, lens, indptr, indices, len(vocab), sizes,
-            ai, bi, band_idx, nh, rpb, min_est, thr,
-        )
-        if len(ai) == 0:
-            return empty
-        return pd.DataFrame(
-            {
-                "id_a": ids[ai],
-                "id_b": ids[bi],
-                "est_jaccard": est,
-                "jaccard": jac,
-            }
-        )
-
-    # r11: pin the bucket exchange at session parallelism (the shuffle
-    # is byte-small but the stage cost is Python pair work, so AQE's
-    # byte-based coalescing under-parallelizes it). r12: the hash
-    # repartition co-locates each bucket's rows and ONE mapInPandas
-    # call per partition recovers the buckets itself — the per-group
-    # applyInPandas bookkeeping (~90k groups at sf0.1, most singleton)
-    # was the stage's dominant cost (measured ~1.5 s/task against
-    # ~0.3 s of pair math). Partition memory is bounded by the shuffle
-    # partition size (cluster knob), same as the groupBy formulation's
-    # largest-group bound plus batching.
+    # Pin the bucket exchange at session parallelism: the shuffle is
+    # byte-small but the stage cost is Python pair work, so AQE's
+    # byte-based coalescing would under-parallelize it. Partition
+    # memory is bounded by the shuffle partition size (cluster knob).
     par = banded.sparkSession.sparkContext.defaultParallelism
-    exch = banded.repartition(par, "band_idx", "band_key")
-    pairs = exch.mapInPandas(pairs_pass, schema=out_schema)
-    if not d_rows:
-        return pairs
-    # r12 giant-bucket decomposition (verdict item 3): the defer pass
-    # reads the SAME exchange (ReusedExchange — the corpus signature
-    # pass and its shuffle run once) and re-emits only giant buckets'
-    # payload rows, keyed (band_key, band, block_a, block_b); the
-    # block stage then gives every pair-matrix block its own task
-    # instead of one unsplittable applyInPandas group doing O(m²) work
-    # serially on a straggler core. Everything stays lazy — no eager
-    # checkpoint, no materialization of the (possibly huge) pair
-    # output, and when no bucket reaches d_rows the defer pass emits
-    # nothing and the block stage is empty.
-    deferred = exch.mapInArrow(defer_pass, schema=defer_schema)
-    giant = (
-        deferred.repartition(par, "__gk", "__band", "__ga", "__gb")
-        .groupBy("__gk", "__band", "__ga", "__gb")
-        .applyInPandas(block_verify, schema=out_schema)
+    return banded.repartition(par, "band_idx", "band_key").mapInPandas(
+        verify, schema=_pair_schema(df.schema[id_col].dataType)
     )
-    return pairs.unionByName(giant)
 
 
 def _incremental_fused(
@@ -1295,16 +1082,14 @@ def _incremental_fused(
     min_est_jaccard: float,
     threshold: float,
     chunk_pairs: int = 1 << 20,
-    giant_rows: int | None = None,
-    giant_threads: int | None = None,
 ) -> DataFrame:
     """Fused single-shuffle INCREMENTAL fuzzy dedup (r11): the
     bipartite analog of :func:`_lsh_verified_fused`. Each side computes
     (signature, shingle array) in one Arrow map pass, both explode to
-    the same band-bucket key space with a side tag, and one
-    ``applyInPandas`` per bucket enumerates ONLY index x batch pairs
-    (est filter, first-matching-band dedup) and verifies survivors
-    with the shared popcount/CSR/BLAS kernels. The staged asymmetric
+    the same band-bucket key space with a side tag, and the same
+    partition pass verifies ONLY index x batch pairs per bucket (est
+    filter, first-matching-band dedup, exact Jaccard through the shared
+    :func:`_verify_pairs`). The staged asymmetric
     pipeline ran two signature passes, a band join, a candidate
     checkpoint, the candidate-id semi-join, a shingle pass +
     checkpoint, routing actions, and the verify join — per-boundary
@@ -1314,260 +1099,21 @@ def _incremental_fused(
     threshold), including self-pairs when an id appears on both sides
     (the staged band join has no id inequality filter).
     """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    nh, rpb = num_hashes, num_hashes // bands
-    band_structs = []
-    for b in range(bands):
-        slots = [f"mh_{b * rpb + r}" for r in range(rpb)]
-        key = "md5(concat_ws(',', " + ", ".join(slots) + "))"
-        band_structs.append(f"struct({b} as band_idx, {key} as band_key)")
-
-    def banded_side(df: DataFrame, side: int) -> DataFrame:
-        combo = _signatures_and_shingles_arrow(
-            df, text_col, id_col, num_hashes, shingle_len
-        )
-        return combo.select(
-            F.lit(side).alias("__side"),
-            F.col(id_col),
-            *[F.col(f"mh_{j}") for j in range(nh)],
-            F.col("__sh"),
-            F.explode(
-                F.expr("array(" + ", ".join(band_structs) + ")")
-            ).alias("band"),
-        ).select(
-            "__side",
-            id_col,
-            *[f"mh_{j}" for j in range(nh)],
-            "__sh",
-            "band.band_idx",
-            "band.band_key",
-        )
-
-    banded = banded_side(index_df, 0).unionByName(banded_side(batch_df, 1))
-
-    id_type = index_df.schema[id_col].dataType
-    out_schema = T.StructType(
-        [
-            T.StructField("id_a", id_type),
-            T.StructField("id_b", id_type),
-            T.StructField("est_jaccard", T.DoubleType()),
-            T.StructField("jaccard", T.DoubleType()),
-        ]
+    args = (text_col, id_col, num_hashes, bands, shingle_len)
+    banded = _banded_payload(index_df, *args, side=0).unionByName(
+        _banded_payload(batch_df, *args, side=1)
     )
-    min_est = float(min_est_jaccard)
-    thr = float(threshold)
-
-    _none4 = (
-        np.zeros(0, dtype=np.int64),
-        np.zeros(0, dtype=np.int64),
-        np.zeros(0, dtype=np.float64),
-        np.zeros(0, dtype=np.float64),
+    verify = _bucket_pass(
+        id_col,
+        num_hashes,
+        rpb=num_hashes // bands,
+        min_est=float(min_est_jaccard),
+        thr=float(threshold),
+        chunk_pairs=chunk_pairs,
     )
-
-    def verify_bipartite(band_idx, ids, side, M8, sh_vals):
-        """Candidate enumeration + exact verification for ONE bipartite
-        bucket, given numpy inputs. Returns (id_a, id_b, est, jac)
-        arrays — called per bucket SLICE by the r12 partition pass
-        (same per-group-overhead removal as the self-join path)."""
-        empty = _none4
-        a_rows = np.flatnonzero(side == 0)
-        b_rows = np.flatnonzero(side == 1)
-        na, nb = len(a_rows), len(b_rows)
-        if na == 0 or nb == 0:
-            return empty
-        m = len(ids)
-        arrs = [np.asarray(a, dtype=np.int64) for a in sh_vals]
-        lens = np.fromiter((len(a) for a in arrs), np.int64, m)
-        flat = np.concatenate(arrs)
-        vocab, indices = np.unique(flat, return_inverse=True)
-        indices = indices.astype(np.int64)
-        indptr = np.zeros(m + 1, dtype=np.int64)
-        np.cumsum(lens, out=indptr[1:])
-        sizes = lens.astype(np.float64)
-
-        # in-task chunk pool for giant bipartite buckets (r11
-        # continuation) — chunks are independent; identical arithmetic,
-        # lock-guarded Mf32/delta lazies (see the self-join bucket)
-        import threading
-
-        state = {"Mf32": None, "delta": None}
-        state_lock = threading.Lock()
-
-        def get_delta(nv):
-            with state_lock:
-                if state["delta"] is None:
-                    state["delta"] = _delta_csr(indptr, indices, nv)
-                return state["delta"]
-
-        def get_Mf32(nv):
-            with state_lock:
-                if state["Mf32"] is None:
-                    Mf32 = np.zeros((m, nv), dtype=np.float32)
-                    rws = np.repeat(np.arange(m, dtype=np.int64), lens)
-                    Mf32[rws, indices] = 1.0
-                    state["Mf32"] = Mf32
-                return state["Mf32"]
-
-        rows_per_chunk = max(1, chunk_pairs // nb)
-
-        def do_chunk(r0):
-            r1 = min(r0 + rows_per_chunk, na)
-            # bipartite chunk: every (index row in [r0,r1)) x batch
-            # row, tracked as POSITIONS (pa, pb) into a_rows/b_rows so
-            # the BLAS panel can be indexed directly after filtering
-            pa = np.repeat(np.arange(r0, r1, dtype=np.int64), nb)
-            pb = np.tile(np.arange(nb, dtype=np.int64), r1 - r0)
-            ai, bi = a_rows[pa], b_rows[pb]
-            # row-gather once, one vectorized compare (see the
-            # self-join bucket: ~4x fewer fancy-index passes)
-            eq = M8[ai] == M8[bi]
-            est = eq.sum(axis=1) / float(nh)
-            keep = est >= min_est
-            for b in range(band_idx):
-                keep &= ~eq[:, b * rpb : (b + 1) * rpb].all(axis=1)
-            pa, pb, est = pa[keep], pb[keep], est[keep]
-            ai, bi = ai[keep], bi[keep]
-            if len(ai) == 0:
-                return None
-            nv = len(vocab)
-            # four-way kernel choice — see the self-join bucket for the
-            # measured cost laws; the delta kernel wins on
-            # near-duplicate families (work = edit deltas, still exact)
-            csize, Mip, Mix, Pip, Pix = get_delta(nv)
-            dlens = (Mip[1:] - Mip[:-1]) + (Pip[1:] - Pip[:-1])
-            delta_cost = (
-                13.0 * (int(dlens[ai].sum()) + int(dlens[bi].sum()))
-                if csize
-                else float("inf")
-            )
-            blas_cost = (r1 - r0) * nb * nv * 0.04
-            csr_cost = 13.0 * (int(lens[bi].sum()) if len(bi) else 0)
-            pop_cost = 2.2 * len(ai) * nv
-            budget_ok = m * nv * 4 <= (256 << 20)
-            if delta_cost < min(blas_cost, csr_cost, pop_cost):
-                inter = _intersect_counts_delta(
-                    csize, Mip, Mix, Pip, Pix, ai, bi
-                ).astype(np.float64)
-            elif budget_ok and blas_cost < min(csr_cost, pop_cost):
-                Mf32 = get_Mf32(nv)
-                # dense duplicate-family bucket: the whole index-chunk
-                # x batch intersection panel in one sgemm (counts
-                # < 2^24, exact in float32)
-                panel = Mf32[a_rows[r0:r1]] @ Mf32[b_rows].T
-                inter = panel[pa - r0, pb].astype(np.int64).astype(
-                    np.float64
-                )
-            elif pop_cost < csr_cost and m * nv <= (256 << 20):
-                inter = _intersect_counts_popcount(
-                    indptr, indices, nv, ai, bi
-                ).astype(np.float64)
-            else:
-                inter = _intersect_counts_csr(
-                    indptr, indices, ai, bi
-                ).astype(np.float64)
-            jac = inter / (sizes[ai] + sizes[bi] - inter)
-            keep2 = jac >= thr
-            if not keep2.any():
-                return None
-            return (
-                ids[ai[keep2]],
-                ids[bi[keep2]],
-                est[keep2],
-                jac[keep2],
-            )
-
-        g_rows = _GIANT_BUCKET_ROWS if giant_rows is None else giant_rows
-        starts = list(range(0, na, rows_per_chunk))
-        if m < g_rows:
-            cthreads = 1
-        elif giant_threads is not None:
-            cthreads = max(1, giant_threads)
-        else:
-            cthreads = _bucket_thread_count(m, chunk_pairs * 40)
-        cthreads = min(cthreads, max(len(starts), 1))
-        if cthreads > 1:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(cthreads) as pool:
-                frames = [
-                    f for f in pool.map(do_chunk, starts) if f is not None
-                ]
-        else:
-            frames = [f for f in map(do_chunk, starts) if f is not None]
-        if not frames:
-            return empty
-        return tuple(
-            np.concatenate([f[c] for f in frames]) for c in range(4)
-        )
-
-    def partition_verify(batches):
-        """ONE call per shuffle partition (mapInPandas) — the r12
-        per-group-overhead removal, bipartite form. The hash
-        repartition on (band_idx, band_key) co-locates each bucket's
-        rows (both sides); one concat + one lexsort recovers buckets
-        as contiguous numpy slices."""
-        frames = [f for f in batches]
-        if not frames:
-            return
-        pdf = (
-            pd.concat(frames, ignore_index=True)
-            if len(frames) > 1
-            else frames[0]
-        )
-        if len(pdf) == 0:
-            return
-        bi_all = pdf["band_idx"].to_numpy()
-        bk_all = pdf["band_key"].to_numpy()
-        order = np.lexsort((bk_all, bi_all))
-        bi_all = bi_all[order]
-        bk_all = bk_all[order]
-        ids_all = pdf[id_col].to_numpy()[order]
-        side_all = pdf["__side"].to_numpy()[order]
-        M8_all = np.column_stack(
-            [pdf[f"mh_{j}"].to_numpy()[order] for j in range(nh)]
-        )
-        sh_all = pdf["__sh"].to_numpy()[order]
-        n = len(ids_all)
-        newgrp = np.concatenate(
-            ([True], (bi_all[1:] != bi_all[:-1]) | (bk_all[1:] != bk_all[:-1]))
-        )
-        starts = np.flatnonzero(newgrp)
-        bounds = np.concatenate((starts, [n]))
-        res = []
-        for k in range(len(starts)):
-            lo, hi = int(bounds[k]), int(bounds[k + 1])
-            if hi - lo < 2:
-                continue
-            out = verify_bipartite(
-                int(bi_all[lo]),
-                ids_all[lo:hi],
-                side_all[lo:hi],
-                M8_all[lo:hi],
-                sh_all[lo:hi],
-            )
-            if len(out[0]):
-                res.append(out)
-        if res:
-            yield pd.DataFrame(
-                {
-                    "id_a": np.concatenate([r[0] for r in res]),
-                    "id_b": np.concatenate([r[1] for r in res]),
-                    "est_jaccard": np.concatenate([r[2] for r in res]),
-                    "jaccard": np.concatenate([r[3] for r in res]),
-                }
-            )
-
-    # r11: pin the bucket exchange at session parallelism (byte-based
-    # AQE coalescing under-parallelizes the Python pair work). r12:
-    # one mapInPandas call per partition instead of one applyInPandas
-    # group per bucket — see the self-join path for the measured
-    # per-group-overhead rationale.
     par = banded.sparkSession.sparkContext.defaultParallelism
     return banded.repartition(par, "band_idx", "band_key").mapInPandas(
-        partition_verify, schema=out_schema
+        verify, schema=_pair_schema(index_df.schema[id_col].dataType)
     )
 
 
@@ -1946,58 +1492,6 @@ def _intersect_counts_delta(
     return inter.astype(np.int64)
 
 
-def _verify_block_pairs(
-    M8, lens, indptr, indices, nvocab, sizes, ai, bi, band_idx, nh, rpb,
-    min_est, thr,
-):
-    """Est-filter + first-matching-band dedup + exact Jaccard for an
-    EXPLICIT candidate index list — the per-group kernel of the r12
-    giant-bucket block-verify stage (verdict item 3). Identical
-    arithmetic to the fused bucket paths: est = agreeing slots / nh in
-    float64, drop if any earlier band fully agrees, intersection counts
-    are exact integers from the shared delta/popcount/CSR kernels,
-    jaccard = inter / (|A| + |B| - inter) in float64. Returns the
-    filtered ``(ai, bi, est, jac)`` arrays."""
-    import numpy as np
-
-    eq = M8[ai] == M8[bi]
-    est = eq.sum(axis=1) / float(nh)
-    keep = est >= min_est
-    for b in range(band_idx):
-        keep &= ~eq[:, b * rpb : (b + 1) * rpb].all(axis=1)
-    ai, bi, est = ai[keep], bi[keep], est[keep]
-    if len(ai) == 0:
-        return ai, bi, est, np.zeros(0, dtype=np.float64)
-    # kernel choice by the measured cost laws of the chunked path
-    # (blocks are <= ~1k rows, so the BLAS panel option is skipped —
-    # all remaining kernels are exact, so the choice is speed-only)
-    csize, Mip, Mix, Pip, Pix = _delta_csr(indptr, indices, nvocab)
-    dlens = (Mip[1:] - Mip[:-1]) + (Pip[1:] - Pip[:-1])
-    delta_cost = (
-        13.0 * (int(dlens[ai].sum()) + int(dlens[bi].sum()))
-        if csize
-        else float("inf")
-    )
-    csr_cost = 13.0 * int(lens[bi].sum())
-    pop_cost = 2.2 * len(ai) * nvocab
-    n_rows = len(indptr) - 1
-    if delta_cost < min(csr_cost, pop_cost):
-        inter = _intersect_counts_delta(
-            csize, Mip, Mix, Pip, Pix, ai, bi
-        ).astype(np.float64)
-    elif pop_cost < csr_cost and n_rows * nvocab <= (256 << 20):
-        inter = _intersect_counts_popcount(
-            indptr, indices, nvocab, ai, bi
-        ).astype(np.float64)
-    else:
-        inter = _intersect_counts_csr(indptr, indices, ai, bi).astype(
-            np.float64
-        )
-    jac = inter / (sizes[ai] + sizes[bi] - inter)
-    keep2 = jac >= thr
-    return ai[keep2], bi[keep2], est[keep2], jac[keep2]
-
-
 def _verify_pairs_blocked(
     cands: DataFrame,
     sh: DataFrame,
@@ -2019,13 +1513,13 @@ def _verify_pairs_blocked(
     Pairs hash into blocks by ``xxhash64(id_a)``; each block's required
     doc shingle sets (both pair sides) are gathered once per block a doc
     appears in, and a cogrouped ``applyInPandas`` task CSR-encodes the
-    block's sets against a block vocabulary and answers every pair with
-    the mask-gather-prefix-sum kernel (:func:`_intersect_counts_csr`) —
-    O(total pair set sizes) numpy work, no per-pair Python and no dense
-    doc x vocab structure at any scale (the r9 dense einsum was
-    O(pairs x vocab) and its fallback ~10 us of Python per pair; r11
-    measurement at sf0.1: 2.4 M-pair verify 14.6 s -> 0.6 s, identical
-    output).
+    block's sets against a block vocabulary and answers every pair
+    through the fused paths' kernel chooser (:func:`_intersect_counts`).
+    Its fallback, the CSR mask kernel, is O(total pair set sizes) numpy
+    work with no per-pair Python and no dense doc x vocab structure at
+    any scale (the r9 dense einsum was O(pairs x vocab) and its
+    fallback ~10 us of Python per pair; r11 measurement at sf0.1:
+    2.4 M-pair verify 14.6 s -> 0.6 s, identical output).
 
     Versus the shuffled array-payload join this replaces: the shuffle
     key is a small block int (AQE-splittable), each doc's shingle array
@@ -2039,7 +1533,6 @@ def _verify_pairs_blocked(
     """
     import numpy as np
     import pandas as pd
-    from pyspark.sql import types as T
 
     n_docs = sh.count()  # checkpointed upstream: a cheap bounded scan
     # Block count balances two linear costs (r9, re-derived r11 for the
@@ -2074,16 +1567,6 @@ def _verify_pairs_blocked(
         sh, need["__id"] == sh[id_col]
     ).select("__dblk", "__id", "__sh")
 
-    id_type = cands.schema["id_a"].dataType
-    out_schema = T.StructType(
-        [
-            T.StructField("id_a", id_type),
-            T.StructField("id_b", id_type),
-            T.StructField("est_jaccard", T.DoubleType()),
-            T.StructField("jaccard", T.DoubleType()),
-        ]
-    )
-
     def verify_block(pairs_pdf: pd.DataFrame, docs_pdf: pd.DataFrame) -> pd.DataFrame:
         empty = pd.DataFrame(
             {
@@ -2095,52 +1578,16 @@ def _verify_pairs_blocked(
         )
         if len(pairs_pdf) == 0 or len(docs_pdf) == 0:
             return empty
-        # CSR-encode the block's shingle sets against a block
-        # vocabulary: the upstream arrays are already per-doc distinct
-        # (array_distinct of the gram STRINGS, then hashed — the same
-        # payload the broadcast join's size()/array_intersect sees), so
-        # the only work is one np.unique(return_inverse) over the
-        # concatenated block payload. Set sizes are the raw array
-        # lengths — identical to the broadcast path's size(__sh).
-        n_rows = len(docs_pdf)
+        # one CSR family per block: each doc's shingle set ships once
+        # per block, and every pair of the block reads it from here
         row_of: dict = {
             did: r for r, did in enumerate(docs_pdf["__id"])
         }
-        arrs = [
-            np.asarray(a, dtype=np.int64) for a in docs_pdf["__sh"]
-        ]
-        lens = np.fromiter((len(a) for a in arrs), np.int64, n_rows)
-        flat = (
-            np.concatenate(arrs) if n_rows else np.empty(0, np.int64)
-        )
-        vocab, indices = np.unique(flat, return_inverse=True)
-        indices = indices.astype(np.int64)
-        indptr = np.zeros(n_rows + 1, dtype=np.int64)
-        np.cumsum(lens, out=indptr[1:])
-        sizes = lens.astype(np.float64)
+        sets = _CsrSets(docs_pdf["__sh"])
         ai = pairs_pdf["id_a"].map(row_of).to_numpy(dtype=np.int64)
         bi = pairs_pdf["id_b"].map(row_of).to_numpy(dtype=np.int64)
-        # Kernel choice from the two measured cost laws (both exact,
-        # both vectorized; constants measured at sf0.1, r11): the CSR
-        # mask kernel costs ~13 ns per partner ELEMENT, the packed-
-        # bitset popcount kernel ~2.2 ns per pair VOCABULARY BIT — so
-        # popcount wins only when the block vocabulary is smaller than
-        # ~6x the average set size (hyper-templated blocks). The bitset
-        # build is additionally bounded so a diverse-vocabulary block
-        # (vocab grows with corpus diversity at the 30x decade) never
-        # allocates an oversized dense bool matrix.
-        total_partner = int(lens[bi].sum()) if len(bi) else 0
-        pop_cost = 2.2 * len(ai) * len(vocab)
-        csr_cost = 13.0 * total_partner
-        if pop_cost < csr_cost and n_rows * len(vocab) <= (256 << 20):
-            inter = _intersect_counts_popcount(
-                indptr, indices, len(vocab), ai, bi
-            ).astype(np.float64)
-        else:
-            inter = _intersect_counts_csr(
-                indptr, indices, ai, bi
-            ).astype(np.float64)
-        jac = inter / (sizes[ai] + sizes[bi] - inter)
+        inter = _intersect_counts(sets, ai, bi)
+        jac = inter / (sets.sizes[ai] + sets.sizes[bi] - inter)
         out = pd.DataFrame(
             {
                 "id_a": pairs_pdf["id_a"].to_numpy(),
@@ -2160,7 +1607,9 @@ def _verify_pairs_blocked(
     return (
         pairs_b.groupBy("__blk")
         .cogroup(doc_sh.groupBy("__dblk"))
-        .applyInPandas(verify_block, schema=out_schema)
+        .applyInPandas(
+            verify_block, schema=_pair_schema(cands.schema["id_a"].dataType)
+        )
     )
 
 
@@ -2568,16 +2017,10 @@ def _banded(
     band_key) rows with side-prefixed column names — the join input for
     asymmetric LSH banding. Identical banding to
     :func:`lsh_candidate_pairs` (md5 over the band's slots)."""
-    rows_per_band = num_hashes // bands
-    band_structs = []
-    for b in range(bands):
-        slots = [f"mh_{b * rows_per_band + r}" for r in range(rows_per_band)]
-        key = "md5(concat_ws(',', " + ", ".join(slots) + "))"
-        band_structs.append(f"struct({b} as band_idx, {key} as band_key)")
     return signatures.select(
         F.col(id_col).alias(f"id_{side}"),
         *[F.col(f"mh_{k}").alias(f"{side}_{k}") for k in range(num_hashes)],
-        F.explode(F.expr("array(" + ", ".join(band_structs) + ")")).alias("band"),
+        _band_structs(num_hashes, bands),
     ).select(
         f"id_{side}",
         *[f"{side}_{k}" for k in range(num_hashes)],
@@ -2660,32 +2103,11 @@ def incremental_neardup_pairs(
     )
     left = _banded(sigs_idx, id_col, "a", num_hashes, bands)
     right = _banded(sigs_new, id_col, "b", num_hashes, bands)
-    rows_per_band = num_hashes // bands
-    agree = sum(
-        F.when(F.col(f"a_{k}") == F.col(f"b_{k}"), 1).otherwise(0)
-        for k in range(num_hashes)
-    )
-
-    def band_agrees(b: int):
-        cond = F.lit(True)
-        for r in range(rows_per_band):
-            k = b * rows_per_band + r
-            cond = cond & (F.col(f"a_{k}") == F.col(f"b_{k}"))
-        return cond
-
-    not_earlier = F.lit(True)
-    for b in range(bands - 1):
-        not_earlier = not_earlier & ~(
-            (F.col("band_idx") > b) & band_agrees(b)
-        )
+    est, not_earlier = _pair_rules(num_hashes, bands)
     cands = (
         left.join(right, ["band_idx", "band_key"])
         .where(not_earlier)
-        .select(
-            "id_a",
-            "id_b",
-            (agree / F.lit(float(num_hashes))).alias("est_jaccard"),
-        )
+        .select("id_a", "id_b", est)
         .where(F.col("est_jaccard") >= min_est_jaccard)
         .localCheckpoint(eager=True)
     )

@@ -267,40 +267,9 @@ def test_fused_giant_bucket_threaded_path_identical(spark):
     serial = pairs()
     threaded = pairs(giant_rows=2, giant_threads=3)
     assert serial == threaded and len(serial) > 0
-    # matrix_budget=0 forces every bucket down the CHUNKED path, so the
-    # threaded chunk pool (lock-guarded Mf32/delta lazies) is exercised
-    chunked_threaded = pairs(
-        giant_rows=2, giant_threads=3, matrix_budget=0
-    )
-    assert serial == chunked_threaded
+    # matrix_budget=0 forces every bucket down the serial CHUNKED path
     chunked_serial = pairs(matrix_budget=0)
     assert serial == chunked_serial
-
-
-def test_incremental_fused_giant_bucket_threaded_identical(spark):
-    """Bipartite analog: the threaded chunk pool in _incremental_fused
-    must reproduce the serial path exactly."""
-    from pyspark.sql import functions as F
-
-    from tensorflow_recorder_spark.operators.dedup import (
-        _incremental_fused,
-    )
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    idx = docs.where(F.col("doc_id") % 10 != 0)
-    bat = docs.where(F.col("doc_id") % 10 == 0)
-
-    def pairs(**kw):
-        return {
-            (r["id_a"], r["id_b"]): (r["est_jaccard"], r["jaccard"])
-            for r in _incremental_fused(
-                idx, bat, "text", "doc_id", 8, 4, 5, 0.25, 0.3, **kw
-            ).collect()
-        }
-
-    serial = pairs()
-    threaded = pairs(giant_rows=2, giant_threads=3)
-    assert serial == threaded and len(serial) > 0
 
 
 def test_ivf_assign_nested_matches_per_arm(spark):
